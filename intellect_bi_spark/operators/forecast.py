@@ -12,11 +12,11 @@ three models:
   (requires ≥2 points)
 
 Spark-first design: the daily aggregation is distributed (exact decimal
-sums); only the *seed scalars* (last date, yT, y0, window mean, last-7
-values) cross to the driver — tiny post-aggregation state at any source
-scale, exactly as the reference's collected series is. Forecast rows are
-generated with pure IEEE double arithmetic that the DuckDB oracle mirrors
-term by term, so results are engine-identical.
+sums); only the last few daily points the seeds need (the last 7, or the
+last ``window``) cross to the driver — tiny post-aggregation state at any
+source scale, exactly as the reference's collected series is. Forecast
+rows are generated with pure IEEE double arithmetic that the DuckDB
+oracle mirrors term by term, so results are engine-identical.
 
 T5 payload: history ∪ forecast tagged by a ``series`` column
 (reference api/main.py:927-961).
@@ -62,33 +62,67 @@ def _clamp(h: int, window: int, n: int) -> tuple[int, int]:
     return max(1, min(int(h), 365)), max(1, min(int(window), n))
 
 
+_SEED_K_MAX = 1 << 12  # largest top-k seed collect; a bigger window
+# (more than ~11 years of daily points) first counts the series, so the
+# top-k heap stays bounded
+
+
+def _exact_mean(spark: SparkSession, values: list[float]) -> float:
+    """``dsum_sql(value) / COUNT(1)`` over ``values``, evaluated by
+    Spark: the same DECIMAL(38,2) casts, exact decimal sum and two-part
+    double conversion as the aggregate.  The sum is a fold over a
+    literal array, exact in any order, and a projection over a VALUES
+    row is computed while planning, so the mean costs no Spark job."""
+    dec = ", ".join(
+        f"CAST({v!r}D AS DECIMAL(38,2))" for v in values if v is not None
+    )
+    s = (
+        f"aggregate(array({dec}), CAST(0 AS DECIMAL(38,2)),"
+        " (a, x) -> a + x)"
+        if dec
+        else "CAST(NULL AS DECIMAL(38,2))"
+    )
+    return spark.sql(
+        "SELECT (CAST(FLOOR(s) AS DOUBLE) + CAST(s - FLOOR(s) AS DOUBLE))"
+        f" / {len(values)} AS base FROM (SELECT {s} AS s FROM VALUES (0))"
+    ).first()["base"]
+
+
 def _forecast_rows(
     spark: SparkSession, sf_dir: str, h: int, algo: str, window: int
 ) -> list[Row]:
     """Compute forecast rows from distributed seed statistics.
 
-    Seed selection is "the last k daily points", expressed as
-    ``orderBy(desc(date)).limit(k)`` → Catalyst TakeOrderedAndProject
-    (per-partition top-k heap, k ≤ 365 rows to the driver merge) — no
-    global sort and no unpartitioned row_number window.
+    The seeds come from ONE collect of the last k daily points —
+    ``orderBy(desc(date)).limit(k)``, which Catalyst runs as
+    TakeOrderedAndProject (per-partition top-k heap, k rows to the
+    driver merge; no global sort, no unpartitioned row_number window):
+    k = 7 for seasonal7, max(window, 2) for drift, window for
+    ma7_baseline.  That collect replaces a separate ``count()`` and
+    ``max(date)``: fewer than k rows back means they are the whole
+    series, so ``min(window, len(rows))`` is the reference's clamp to
+    the series length, and ``rows[0]`` holds the last date.  The
+    ma7_baseline mean is the exact decimal mean of the collected values
+    (:func:`_exact_mean`), so every algorithm costs the collect's jobs
+    only.
     """
     daily = daily_series(spark, sf_dir)
-
-    n = daily.count()
-    if n == 0:
+    w = max(1, int(window))
+    k = 7 if algo == "seasonal7" else max(w, 2) if algo == "drift" else w
+    if k > _SEED_K_MAX:
+        k = max(1, min(k, daily.count()))
+    rows = last_k_by(daily, "date", k).collect()  # date descending
+    if not rows:
         return []
-    h, window = _clamp(h, window, n)
-    last_date = daily.agg(F.max("date")).first()[0]
+    h, window = _clamp(h, w, len(rows))
+    last_date = rows[0]["date"]
 
     out: list[Row] = []
     if algo == "seasonal7":
-        if n < 7:
+        if len(rows) < 7:
             raise ValueError("Need >= 7 history points for seasonal7")
         # last 7 values in date order; forecast cycles them
-        last7 = [
-            r["value"]
-            for r in last_k_by(daily, "date", 7).orderBy("date").collect()
-        ]
+        last7 = [r["value"] for r in reversed(rows)]
         for i in range(1, h + 1):
             out.append(
                 Row(
@@ -98,18 +132,10 @@ def _forecast_rows(
                 )
             )
     elif algo == "drift":
-        if n < 2:
+        if len(rows) < 2:
             raise ValueError("Need >= 2 history points for drift")
         # y0 = oldest, yT = newest of the last-`window` points
-        seed = (
-            last_k_by(daily, "date", window)
-            .agg(
-                F.min_by("value", "date").alias("y0"),
-                F.max_by("value", "date").alias("y_t"),
-            )
-            .first()
-        )
-        y0, y_t = seed["y0"], seed["y_t"]
+        y0, y_t = rows[window - 1]["value"], rows[0]["value"]
         t_div = window - 1 if window > 1 else 1
         slope = (y_t - y0) / t_div
         for i in range(1, h + 1):
@@ -121,15 +147,7 @@ def _forecast_rows(
                 )
             )
     else:  # ma7_baseline: flat mean of last `window` points
-        base = (
-            last_k_by(daily, "date", window)
-            .agg(
-                (
-                    F.expr(dsum_sql("value")) / F.count(F.lit(1))
-                ).alias("base")
-            )
-            .first()["base"]
-        )
+        base = _exact_mean(spark, [r["value"] for r in rows[:window]])
         for i in range(1, h + 1):
             out.append(
                 Row(

@@ -41,10 +41,13 @@ integer arithmetic.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..functions.memo import SessionMemo
 from ..functions.text import P, md5_mod_hash_duck, md5_mod_hash_sql
 
 TOKEN_SPLIT = "[^a-z0-9]+"
@@ -367,6 +370,11 @@ def _ndcg_composed(spark, sf_dir):
 # --- persisted lexical serving: the BM25 inverted-index store (r10) ----------
 
 
+_BM25_V1_POSTING_SCHEMA = "term string, doc_id bigint, dl int, tf bigint"
+_BM25_LEXICON_SCHEMA = "term string, df bigint"
+_BM25_V1_STATS_SCHEMA = "avgdl double, n_docs bigint"
+
+
 def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Write the classic lexical-serving layout to parquet: ``postings``
     (term, doc_id, tf, dl) — the inverted index, ``lexicon`` (term, df),
@@ -405,7 +413,9 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     postings.write.mode("overwrite").parquet(f"{path}/postings")
     # lexicon df derives from the STORED postings (one row per
     # term×doc), so store and lexicon cannot drift
-    spark.read.parquet(f"{path}/postings").groupBy("term").agg(
+    spark.read.schema(_BM25_V1_POSTING_SCHEMA).parquet(
+        f"{path}/postings"
+    ).groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     ).write.mode("overwrite").parquet(f"{path}/lexicon")
     toks.agg(
@@ -421,48 +431,105 @@ def read_bm25_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     return (
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/lexicon"),
-        spark.read.parquet(f"{path}/stats"),
+        spark.read.schema(_BM25_V1_POSTING_SCHEMA).parquet(f"{path}/postings"),
+        spark.read.schema(_BM25_LEXICON_SCHEMA).parquet(f"{path}/lexicon"),
+        spark.read.schema(_BM25_V1_STATS_SCHEMA).parquet(f"{path}/stats"),
+    )
+
+
+def _bm25_fold(
+    hit: DataFrame,
+    df_of: dict,
+    n_docs: int,
+    avgdl: float,
+    keys: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """(*keys, n_hit_terms, score_q): THE BM25 fold every scoring path
+    shares — per posting, the :func:`_bm25_term_score` text; per key,
+    the strict term-ordered sum quantized to 2^-10.  The corpus
+    statistics enter as literals: ``df_of`` (term → df) as a CASE on
+    the term, ``n_docs`` and ``avgdl``.  A broadcast of even a 1-row
+    relation costs a Spark job, so the literals are what keep a warm
+    serve at the scan's own jobs.  Postings of a term without a df are
+    dropped — the inner-join semantics of the lexicon join this
+    replaces.  Every double is the same arithmetic on the same exact
+    operands as the join form, so scores are bit-identical."""
+    terms = sorted(df_of)
+    df_col = (
+        F.expr(
+            "CASE term "
+            + " ".join(f"WHEN '{t}' THEN {int(df_of[t])}" for t in terms)
+            + " END"
+        )
+        if terms
+        else F.lit(None).cast("bigint")
+    )
+    scored = (
+        hit.filter(F.col("term").isin(*terms))
+        .select(
+            *keys,
+            "term",
+            "tf",
+            "dl",
+            df_col.alias("df"),
+            F.lit(n_docs).alias("n_docs"),
+            F.lit(avgdl).alias("avgdl"),
+        )
+        .select(
+            *keys,
+            "term",
+            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
+        )
+    )
+    per = scored.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_hit_terms"),
+        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
+    )
+    return per.select(
+        *keys,
+        "n_hit_terms",
+        F.expr(
+            "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
+            f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
+            " AS BIGINT)"
+        ).alias("score_q"),
+    )
+
+
+def _bm25_topk(
+    hit: DataFrame, df_of: dict, n_docs: int, avgdl: float
+) -> DataFrame:
+    """The fixed query's TOP_K over ``hit`` postings (score desc,
+    doc_id tie-break)."""
+    return (
+        _bm25_fold(hit, df_of, n_docs, avgdl)
+        .orderBy(F.desc("score_q"), "doc_id")
+        .limit(TOP_K)
     )
 
 
 def topk_from_bm25_index(
     postings: DataFrame, lexicon: DataFrame, stats: DataFrame
 ) -> DataFrame:
-    """Serve the fixed query FROM the stored tables: term-filter the
-    postings scan (pushed to parquet as an IN filter), broadcast the
-    ≤|query terms| lexicon rows and the 1-row stats, and rebuild the
-    identical term-ordered per-document fold — every double is the same
-    arithmetic on the same exact integers, so the output must equal
+    """Serve the fixed query FROM the given tables: collect the
+    ≤|query terms| lexicon rows and the 1-row (avgdl, n_docs) stats to
+    the driver, term-filter the postings scan (pushed to parquet as an
+    IN filter) and rebuild the identical term-ordered per-document fold
+    (:func:`_bm25_fold`) — every double is the same arithmetic on the
+    same exact integers, so the output must equal
     :func:`bm25_topk_docs` bit for bit (the unit test asserts it)."""
-    hit = postings.filter(F.col("term").isin(*QUERY_TERMS))
-    lex = lexicon.filter(F.col("term").isin(*QUERY_TERMS))
-    scored = (
-        hit.join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), "doc_id")
-        .limit(TOP_K)
+    df_of = {
+        r["term"]: r["df"]
+        for r in lexicon.filter(F.col("term").isin(*QUERY_TERMS))
+        .select("term", "df")
+        .collect()
+    }
+    st = stats.select("n_docs", "avgdl").first()
+    return _bm25_topk(
+        postings.filter(F.col("term").isin(*QUERY_TERMS)),
+        df_of,
+        st["n_docs"],
+        st["avgdl"],
     )
 
 
@@ -715,15 +782,20 @@ def _read_segments(
 ) -> DataFrame:
     """Read exactly the (seg, bucket) directories a manifest pins —
     ``basePath`` keeps seg/bucket as partition columns — normalized to
-    the logical posting ``schema`` (seg dropped).  An empty pin list
-    yields an empty frame of the same schema, so serving a store with
-    no matching buckets degrades to zero rows, not an error."""
+    the logical posting ``schema`` (seg dropped).  The read passes
+    ``schema`` rather than inferring it, which would cost a Spark job
+    per read.  An empty pin list yields an empty frame of the same
+    schema, so serving a store with no matching buckets degrades to
+    zero rows, not an error."""
     cols = [c.split()[0] for c in schema.split(",")]
     dirs = sorted({f"{root}/seg={s}/{pcol}={t}" for s, t in entries})
     if not dirs:
         return spark.createDataFrame([], schema)
     return (
-        spark.read.option("basePath", root).parquet(*dirs).select(*cols)
+        spark.read.schema(schema)
+        .option("basePath", root)
+        .parquet(*dirs)
+        .select(*cols)
     )
 
 
@@ -960,6 +1032,7 @@ def _base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BM25_POSTING_SCHEMA = "term string, doc_id bigint, dl int, tf bigint, tb int"
+_BM25_STATS_SCHEMA = "n_docs bigint, sum_len bigint"
 
 
 def _init_bm25_store(
@@ -1089,7 +1162,7 @@ def upsert_bm25_index(
                 _write_segment(bp.repartition(N_TB, "tb"), root, seg)
 
             def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = spark.read.parquet(
+                old_lex = spark.read.schema(_BM25_LEXICON_SCHEMA).parquet(
                     _table_dir(spark, path, "lexicon", v)
                 )
                 (
@@ -1106,7 +1179,7 @@ def upsert_bm25_index(
                 )
 
             def _stage_stats(v=v, att=att) -> None:
-                old_stats = spark.read.parquet(
+                old_stats = spark.read.schema(_BM25_STATS_SCHEMA).parquet(
                     _table_dir(spark, path, "stats", v)
                 )
                 (
@@ -1151,6 +1224,89 @@ def upsert_bm25_index(
         toks.unpersist()
 
 
+def _serve_terms() -> list[str]:
+    """Every term a store serve scores: the fixed query's and the
+    batch queries'."""
+    return sorted(set(QUERY_TERMS) | {t for _, ts in BM25_BATCH for t in ts})
+
+
+class _VersionState(NamedTuple):
+    """What a serve needs of one published BM25 store version besides
+    its postings: the manifest pins, the serve terms' df, and the
+    exact (n_docs, sum_len)."""
+
+    entries: list
+    df_of: dict
+    n_docs: int
+    sum_len: int
+
+    @property
+    def avgdl(self) -> float:
+        # the division the direct pass performs, CAST(sum_len AS
+        # DOUBLE) / CAST(n_docs AS DOUBLE), in IEEE doubles
+        return float(self.sum_len) / float(self.n_docs) if self.n_docs else 0.0
+
+
+# A published version never changes after its publish, so its state is
+# memoized under (store, version, winning attempt): a store rebuilt at
+# the same path publishes v=1 under a fresh attempt id and misses.  The
+# latest-version lookup itself is never memoized — every serve lists
+# the published markers, so it always sees the newest publish.
+_VERSION_MEMO = SessionMemo(cap=32)
+
+
+def _version_state(spark: SparkSession, path: str, v: int) -> _VersionState:
+    """Version ``v``'s :class:`_VersionState` — memoized; a miss costs
+    ONE Spark job (the lexicon's serve-term rows and the stats row,
+    read with their known schemas, collected as one union)."""
+    att = _version_meta(spark, path, v)["att"]
+    key = f"{path}#v={v}-{att}"
+    state = _VERSION_MEMO.get(spark, key)
+    if state is not None:
+        return state
+    lex = (
+        spark.read.schema(_BM25_LEXICON_SCHEMA)
+        .parquet(_stage_path(path, "lexicon", v, att))
+        .filter(F.col("term").isin(*_serve_terms()))
+        .select("term", "df", F.lit(None).cast("bigint").alias("sum_len"))
+    )
+    stats = (
+        spark.read.schema(_BM25_STATS_SCHEMA)
+        .parquet(_stage_path(path, "stats", v, att))
+        .select(F.lit(None).cast("string").alias("term"), "n_docs", "sum_len")
+    )
+    rows = lex.unionAll(stats).collect()
+    # the union is positional: the stats row carries n_docs under "df"
+    st = next(r for r in rows if r["term"] is None)
+    state = _VersionState(
+        entries=_manifest_entries(spark, path, v),
+        df_of={r["term"]: r["df"] for r in rows if r["term"] is not None},
+        n_docs=st["df"],
+        sum_len=st["sum_len"],
+    )
+    return _VERSION_MEMO.put(spark, key, state)
+
+
+def _pinned_postings(
+    spark: SparkSession, path: str, state: _VersionState, terms
+) -> DataFrame:
+    """The version's postings for ``terms``: only the manifest-pinned
+    (seg, tb) directories of the terms' buckets are listed (manifest-
+    level pruning), and the scan still carries the tb partition filter
+    and the pushed term IN-filter."""
+    import zlib
+
+    buckets = sorted({zlib.crc32(t.encode("utf-8")) % N_TB for t in terms})
+    entries = [e for e in state.entries if e[1] in set(buckets)]
+    return (
+        _read_segments(
+            spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
+        )
+        .filter(F.col("tb").isin(buckets))
+        .filter(F.col("term").isin(*terms))
+    )
+
+
 def serve_bm25_v2_at(
     spark: SparkSession, path: str, v: int
 ) -> DataFrame:
@@ -1163,26 +1319,19 @@ def serve_bm25_v2_at(
     the read touches is pinned by ``v``'s manifest and segments are
     immutable, a reader of ``v`` is FULLY isolated from concurrent
     upserts, deletes and compactions (VERDICT r13 #3 — the unit proves
-    a mid-delete reader of v sees the complete pre-delete store)."""
-    import zlib
+    a mid-delete reader of v sees the complete pre-delete store).
 
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in QUERY_TERMS}
+    The version's manifest pins, df and (n_docs, sum_len) come from
+    the version memo (:func:`_version_state`) and enter the fold as
+    literals, and every read passes its known schema, so a serve of a
+    version already read launches only the scan's own two jobs."""
+    state = _version_state(spark, path, v)
+    return _bm25_topk(
+        _pinned_postings(spark, path, state, QUERY_TERMS),
+        state.df_of,
+        state.n_docs,
+        state.avgdl,
     )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = _read_segments(
-        spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-    ).filter(F.col("tb").isin(buckets))
-    lexicon = spark.read.parquet(_table_dir(spark, path, "lexicon", v))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
-    )
-    return topk_from_bm25_index(postings, lexicon, stats)
 
 
 def serve_bm25_v2(spark: SparkSession, path: str) -> DataFrame:
@@ -1246,8 +1395,10 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_bm25_upsert_stream(spark, sf_dir, tmp)
         store = f"{tmp}/store"
         v = _latest_version(spark, store)
-        nd = spark.read.parquet(_table_dir(spark, store, "stats", v)).select(
-            F.col("n_docs").alias("n_docs_indexed")
+        nd = (
+            spark.read.schema(_BM25_STATS_SCHEMA)
+            .parquet(_table_dir(spark, store, "stats", v))
+            .select(F.col("n_docs").alias("n_docs_indexed"))
         )
         out = (
             serve_bm25_v2(spark, store)
@@ -1466,8 +1617,10 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_bm25_index(spark, tmp, b2)
         purged = vacuum_bm25_store(spark, tmp, keep_last=RETAIN_VERSIONS)
         v = _latest_version(spark, tmp)
-        nd = spark.read.parquet(_table_dir(spark, tmp, "stats", v)).select(
-            F.col("n_docs").alias("n_docs_indexed")
+        nd = (
+            spark.read.schema(_BM25_STATS_SCHEMA)
+            .parquet(_table_dir(spark, tmp, "stats", v))
+            .select(F.col("n_docs").alias("n_docs_indexed"))
         )
         out = (
             serve_bm25_v2(spark, tmp)
@@ -1547,7 +1700,7 @@ def delete_from_bm25_index(
             att = _new_att()
 
             def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = spark.read.parquet(
+                old_lex = spark.read.schema(_BM25_LEXICON_SCHEMA).parquet(
                     _table_dir(spark, path, "lexicon", v)
                 )
                 (
@@ -1564,7 +1717,7 @@ def delete_from_bm25_index(
                 )
 
             def _stage_stats(v=v, att=att) -> None:
-                old_stats = spark.read.parquet(
+                old_stats = spark.read.schema(_BM25_STATS_SCHEMA).parquet(
                     _table_dir(spark, path, "stats", v)
                 )
                 (
@@ -2293,14 +2446,14 @@ def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
             _write_segment(rows.repartition(len(buckets), "tb"), root, seg)
 
         def _stage_lexicon(v=v, att=att) -> None:
-            spark.read.parquet(
+            spark.read.schema(_BM25_LEXICON_SCHEMA).parquet(
                 _table_dir(spark, path, "lexicon", v)
             ).write.mode("overwrite").parquet(
                 _stage_path(path, "lexicon", v + 1, att)
             )
 
         def _stage_stats(v=v, att=att) -> None:
-            spark.read.parquet(
+            spark.read.schema(_BM25_STATS_SCHEMA).parquet(
                 _table_dir(spark, path, "stats", v)
             ).write.mode("overwrite").parquet(
                 _stage_path(path, "stats", v + 1, att)
@@ -2518,7 +2671,7 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = _latest_version(spark, tmp)
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _vac = _pool.submit(vacuum_bm25_store, spark, tmp, keep_last=1)
-            nd = spark.read.parquet(
+            nd = spark.read.schema(_BM25_STATS_SCHEMA).parquet(
                 _table_dir(spark, tmp, "stats", v)
             ).select(F.col("n_docs").alias("n_docs_indexed"))
             out = (
@@ -3226,69 +3379,31 @@ def serve_bm25_batch_from_store(
     """Top-k per query for a BATCH of BM25 term-set queries in ONE
     pinned postings scan: manifest-level directory pruning to the
     union of the batch's term buckets, the pushed term IN-filter on
-    the scan, lexicon/stats of the pinned version broadcast, per-
-    (qid, doc) term-ordered fold, per-query window top-k."""
-    import zlib
-
+    the scan, the pinned version's df and corpus stats as literals
+    (:func:`_version_state`), per-(qid, doc) term-ordered fold, per-
+    query window top-k."""
     from pyspark.sql import Window
 
     if v is None:
         v = _latest_version(spark, path)
     all_terms = sorted({t for _, ts in BM25_BATCH for t in ts})
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in all_terms}
-    )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = (
-        _read_segments(
-            spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-        )
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
-    )
+    state = _version_state(spark, path, v)
     q = spark.createDataFrame(
         [(qid, t) for qid, ts in BM25_BATCH for t in ts],
         "qid int, term string",
     )
-    lex = spark.read.parquet(
-        _table_dir(spark, path, "lexicon", v)
-    ).filter(F.col("term").isin(all_terms))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
-    )
-    scored = (
-        postings.join(F.broadcast(q), "term")
-        .join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "qid",
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per = scored.groupBy("qid", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
+    per = _bm25_fold(
+        _pinned_postings(spark, path, state, all_terms).join(
+            F.broadcast(q), "term"
+        ),
+        state.df_of,
+        state.n_docs,
+        state.avgdl,
+        keys=("qid", "doc_id"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score_q"), "doc_id")
     return (
-        per.select(
-            "qid",
-            "doc_id",
-            "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
-        )
-        .withColumn("rank", F.row_number().over(w))
+        per.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= BM25_BATCH_K)
         .orderBy("qid", "rank")
     )
@@ -3378,60 +3493,17 @@ def serve_bm25_filtered_from_store(
     postings scan + pushed term IN-filter, semi-join against the
     lang-filtered doc ids (the lang equality is pushed into the
     documents scan), THEN the global-stats score fold."""
-    import zlib
-
-    v = _latest_version(spark, path)
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in QUERY_TERMS}
-    )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = (
-        _read_segments(
-            spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-        )
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(*QUERY_TERMS))
-    )
+    state = _version_state(spark, path, _latest_version(spark, path))
     keep_ids = docs_meta.filter(F.col("lang") == FILTER_LANG).select(
         "doc_id"
     )
-    hit = postings.join(keep_ids, "doc_id", "left_semi")
-    lex = spark.read.parquet(
-        _table_dir(spark, path, "lexicon", v)
-    ).filter(F.col("term").isin(*QUERY_TERMS))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
-    )
-    scored = (
-        hit.join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), "doc_id")
-        .limit(TOP_K)
+    return _bm25_topk(
+        _pinned_postings(spark, path, state, QUERY_TERMS).join(
+            keep_ids, "doc_id", "left_semi"
+        ),
+        state.df_of,
+        state.n_docs,
+        state.avgdl,
     )
 
 

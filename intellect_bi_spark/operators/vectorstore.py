@@ -19,18 +19,25 @@ What gets stored (the three tables a real IVF-PQ index serves from):
   **directory-partitioned by the IVF cell**, so a probe reads only its
   cells' files: partition pruning IS the IVF inverted list on parquet.
 
-Query path, all from the store: probe the N_PROBE cells nearest the
-query (tiny centroid table, broadcast) → scan ONLY those partitions of
-the code table → ADC distance from the stored codebook (fixed-point
-BIGINT, order-independent) → keep the CAND_K best candidates → exact
-full-precision cosine rerank against the base embeddings table → top-k.
-This is the textbook IVFADC serving pipeline (Jégou et al. 2011,
-"Product Quantization for Nearest Neighbor Search"), restated as three
-broadcast joins and one partition-pruned scan — no all-pairs product,
-no driver-side model beyond the broadcast codebook.
+Query path, all from the store: collect the tiny model tables and the
+query vector to the driver, which ranks the centroids and keeps the
+N_PROBE nearest cells, and tabulates the query's ADC distance to every
+(subspace, sub-centroid) pair (fixed-point BIGINT) → scan ONLY those
+cells' partitions of the code table, looking each code's distance up in
+that table → keep the CAND_K best candidates → exact full-precision
+cosine rerank (a broadcast join of the candidates) against the base
+embeddings table → top-k.  This is the textbook IVFADC serving pipeline
+(Jégou et al. 2011, "Product Quantization for Nearest Neighbor
+Search"): one partition-pruned scan and one broadcast join — no
+all-pairs product.  The model tables of a store are frozen, so
+:func:`read_index_versioned` memoizes them per store as local relations
+and a warm serve reads nothing but the query vector, the probed codes
+and the reranked vectors.  The driver-side probe and ADC table run the
+same left-fold double arithmetic as the Spark expressions they replace,
+so every distance is bit-identical.
 
 Scale notes: at 100 TB the codes table is ~2 bytes/vector payload, the
-centroid/codebook tables are KBs (always broadcast), and the rerank
+centroid/codebook tables are KBs (always driver-sized), and the rerank
 touches only CAND_K full vectors fetched by an equi-join on vec_id.
 The expensive stage — one corpus scan to assign cells and codes — runs
 once at build time, not per query.
@@ -47,9 +54,12 @@ the pruned-partition read returns exactly the probed cells' codes.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.memo import SessionMemo
 from .clustering import M_SUB, QUANT, SUBDIM, _pq_codes, _subspace_rows
 from .similarity import (
     N_BATCH_QUERIES,
@@ -91,10 +101,12 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     into a build-unique temp dir and are RENAMED into place only after
     all three jobs complete: a failed build leaves only ``_build-*``
     debris (never a readable partial table), and the rename is a cheap
-    driver-side metadata op.  Rebuilding over an existing store keeps a
-    delete-then-rename window per table — still strictly smaller than
-    v2's task-level partial-write exposure, and no current caller
-    rebuilds in place (all build into fresh temp dirs)."""
+    driver-side metadata op.  A rename that fails partway keeps the
+    stage — its remaining tables are then the build's only copy.
+    Rebuilding over an existing store keeps a delete-then-rename
+    window per table — still strictly smaller than v2's task-level
+    partial-write exposure, and no current caller rebuilds in place
+    (all build into fresh temp dirs)."""
     emb = _emb(spark, sf_dir)
     codes, cb = _pq_codes(spark, sf_dir)
     from .retrieval import _fs_of, _new_att, _run_staged
@@ -122,22 +134,64 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
         ),
     )
     fs, _ = _fs_of(spark, path)
-    try:
-        for table in ("centroids", "codebook", "codes"):
-            _, dst = _fs_of(spark, f"{path}/{table}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            _, src = _fs_of(spark, f"{stage}/{table}")
-            if not fs.rename(src, dst):
-                raise IOError(f"rename {src} -> {dst} failed")
-    finally:
-        _, sp = _fs_of(spark, stage)
-        if fs.exists(sp):
-            fs.delete(sp, True)
+    for table in ("centroids", "codebook", "codes"):
+        _, dst = _fs_of(spark, f"{path}/{table}")
+        if fs.exists(dst):
+            fs.delete(dst, True)
+        _, src = _fs_of(spark, f"{stage}/{table}")
+        if not fs.rename(src, dst):
+            raise IOError(f"rename {src} -> {dst} failed")
+    # the stage goes only after EVERY rename succeeded: after a failed
+    # rename its not-yet-renamed tables are the only good copy
+    _, sp = _fs_of(spark, stage)
+    if fs.exists(sp):
+        fs.delete(sp, True)
     # the PQ training artifacts are the session-lifetime memoized model
     # (clustering._pq_model) shared by every PQ consumer — the serving
     # path's query-subvector derivation reuses them via CacheManager
     # subplan substitution; clustering.reset_caches() owns the release
+
+
+def _fold_dot(a, b) -> float:
+    """:func:`similarity._dot` on the driver: the same left fold of
+    the same double products, so the same double."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _probe(centroids: list, q: list) -> list[int]:
+    """The N_PROBE cells nearest ``q`` by cosine, ties → lower cell:
+    the ``orderBy(desc(q_cos), cell).limit(N_PROBE)`` of the Spark
+    form, on the collected centroid rows."""
+    q_norm = math.sqrt(_fold_dot(q, q))
+    cos = [
+        (
+            -(_fold_dot(r["c_emb"], q)
+              / (math.sqrt(_fold_dot(r["c_emb"], r["c_emb"])) * q_norm)),
+            r["cell"],
+        )
+        for r in centroids
+    ]
+    return [cell for _, cell in sorted(cos)[:N_PROBE]]
+
+
+def _adc_table(codebook: list, q: list) -> dict:
+    """(m, cid) → the query's fixed-point ADC distance to that
+    sub-centroid, ``FLOOR(Σ(q_m − c)² · QUANT + 0.5)`` folded left in
+    doubles exactly as the Spark expression does.  Subspace ``m`` of
+    ``q`` is elements ``m·SUBDIM+1 .. (m+1)·SUBDIM`` (the
+    clustering._subspace_rows slicing)."""
+    out = {}
+    for r in codebook:
+        m = int(r["m"])
+        sub = [float(x) for x in q[m * SUBDIM:(m + 1) * SUBDIM]]
+        acc = 0.0
+        for x, y in zip(sub, r["carr"]):
+            acc = acc + (x - y) * (x - y)
+        out[(m, int(r["cid"]))] = math.floor(acc * float(QUANT) + 0.5)
+    return out
 
 
 def topk_from_index(
@@ -150,49 +204,52 @@ def topk_from_index(
     """IVFADC serving over (possibly stored) index frames: probe →
     pruned ADC scan → CAND_K candidates → exact-cosine rerank → top-k.
 
+    The model frames (N_CELLS centroids, M_SUB·KS codebook rows) and
+    the query vector are collected to the driver, which picks the
+    probe cells and tabulates the query's ADC distances (:func:`_probe`,
+    :func:`_adc_table`).  One ``cell IN (...)`` scan of the codes then
+    sums each candidate's table lookups, and the CAND_K best are
+    reranked by exact cosine in a broadcast join.  A model frame that
+    is a local relation (:func:`read_index_versioned`) collects
+    without a Spark job.
+
     Takes the index as DataFrames so tests can prove stored ≡ in-memory
     (pass the pre-write frames vs the read-back frames)."""
-    q = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb")
+    q_rows = emb.filter(F.col("vec_id") == query_vec_id).select(
+        "embedding"
+    ).collect()
+    # an unknown query id probes no cell and so answers no rows
+    q = list(q_rows[0]["embedding"]) if q_rows else []
+    probe = _probe(centroids.collect(), q) if q else []
+    adc = _adc_table(codebook.collect(), q)
+    stride = max((cid for _, cid in adc), default=0) + 1
+    lut = F.create_map(
+        *[
+            x
+            for (m, cid), dq in sorted(adc.items())
+            for x in (F.lit(m * stride + cid).cast("bigint"),
+                      F.lit(dq).cast("bigint"))
+        ]
     )
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(
-            "cell",
-            (_dot("c_emb", "q_emb") / (_norm("c_emb") * _norm("q_emb"))).alias(
-                "q_cos"
-            ),
-        )
-        .orderBy(F.desc("q_cos"), "cell")
-        .limit(N_PROBE)
-        .select("cell")
-    )
-    # the query's per-subspace subvectors (M_SUB tiny rows, broadcast)
-    q_sub = _subspace_rows(
-        emb.filter(F.col("vec_id") == query_vec_id)
-    ).select("m", F.col("sub").alias("qsub"))
     # partition-pruned ADC scan: only probed cells' code files are read
-    adc = (
-        codes.join(F.broadcast(probe_cells), "cell", "left_semi")
+    dists = (
+        codes.filter(F.col("cell").isin(probe))
         .filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(codebook), ["m", "cid"])
-        .join(F.broadcast(q_sub), "m")
         .select(
             "vec_id",
-            F.expr(
-                "CAST(FLOOR(aggregate(zip_with(qsub, carr,"
-                " (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE),"
-                f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT)"
+            F.try_element_at(
+                lut, F.col("m").cast("bigint") * stride + F.col("cid")
             ).alias("dq"),
         )
         .groupBy("vec_id")
         .agg(F.sum("dq").alias("dist_q"))
     )
-    cand = adc.orderBy("dist_q", "vec_id").limit(CAND_K)
+    cand = dists.orderBy("dist_q", "vec_id").limit(CAND_K)
+    q_emb = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
     # exact full-precision rerank: only CAND_K base vectors are fetched
     return (
         emb.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
+        .select("vec_id", "label", "embedding", q_emb.alias("q_emb"))
         .select(
             "vec_id",
             "label",
@@ -486,18 +543,102 @@ def _ann_pinned_codes(
     )
 
 
+_ANN_CENTROIDS_SCHEMA = "cell int, c_emb array<float>"
+_ANN_CODEBOOK_SCHEMA = "m bigint, cid bigint, carr array<double>"
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
+    if isinstance(v, float):
+        # repr round-trips every double exactly; the D suffix keeps it
+        # a DOUBLE literal (a bare 0.5 parses as DECIMAL)
+        return f"{v!r}D"
+    return str(int(v))
+
+
+def _local_frame(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a ``VALUES`` relation of the same schema.
+    Collecting a local relation runs no Spark job (a createDataFrame
+    frame, built on an RDD, costs one per action), so a memoized model
+    frame is free to collect on every serve."""
+    spark = df.sparkSession
+    rows = df.collect()
+    fields = df.schema.fields
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(x) for x in r) + ")" for r in rows
+    )
+    cols = ", ".join(f"c{i}" for i in range(len(fields)))
+    proj = ", ".join(
+        f"CAST(c{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for i, f in enumerate(fields)
+    )
+    return spark.sql(f"SELECT {proj} FROM VALUES {values} AS t({cols})")
+
+
+def _model_identity(spark: SparkSession, path: str) -> str:
+    """The model tables' file names: every write of them names its part
+    files after that write job's fresh UUID, so a store rebuilt at the
+    same path (after an rmtree, or overwritten in place) never matches
+    the identity of the model it replaced.  (The v=1 publish marker
+    would not do: vacuum deletes it once v=1 leaves the retention
+    window.)  Pure metadata — one listing per table, no Spark job."""
+    from .retrieval import _fs_of
+
+    names = []
+    for table in ("centroids", "codebook"):
+        fs, hp = _fs_of(spark, f"{path}/{table}")
+        names += [
+            f"{table}/{st.getPath().getName()}" for st in fs.listStatus(hp)
+        ]
+    return ",".join(sorted(names))
+
+
+# The frozen model tables of each store, as local relations — bounded,
+# lock-guarded, keyed per session by (store path, model identity).
+_MODEL_MEMO = SessionMemo()
+
+
+def _frozen_model(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, codebook) of the store at ``path``, memoized: the
+    model is a build-time artifact no mutation touches.  A miss reads
+    both tables with their known schemas (two small jobs)."""
+    key = f"{path}#{_model_identity(spark, path)}"
+    model = _MODEL_MEMO.get(spark, key)
+    if model is None:
+        model = _MODEL_MEMO.put(
+            spark,
+            key,
+            (
+                _local_frame(
+                    spark.read.schema(_ANN_CENTROIDS_SCHEMA).parquet(
+                        f"{path}/centroids"
+                    )
+                ),
+                _local_frame(
+                    spark.read.schema(_ANN_CODEBOOK_SCHEMA).parquet(
+                        f"{path}/codebook"
+                    )
+                ),
+            ),
+        )
+    return model
+
+
 def read_index_versioned(
     spark: SparkSession, path: str, v: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(centroids, codebook, pinned codes) of the manifest-pinned
     store — the versioned twin of :func:`read_index` (the simple
     build-once store keeps its flat layout; it has no mutations to
-    isolate)."""
-    return (
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/codebook"),
-        _ann_pinned_codes(spark, path, v),
-    )
+    isolate).  The frozen model comes from the store's model memo as
+    job-free local relations (:func:`_frozen_model`); the codes read
+    passes its known schema, so building the three frames launches no
+    Spark job once the model is memoized."""
+    centroids, codebook = _frozen_model(spark, path)
+    return centroids, codebook, _ann_pinned_codes(spark, path, v)
 
 
 def _init_ann_versioned(
@@ -582,8 +723,7 @@ def upsert_index(
         _write_manifest,
     )
 
-    centroids = spark.read.parquet(f"{path}/centroids")
-    cb = spark.read.parquet(f"{path}/codebook")
+    centroids, cb = _frozen_model(spark, path)
     seg, cells = _ann_write_codes_segment(
         spark, _encode_codes(batch, cb, centroids), path
     )

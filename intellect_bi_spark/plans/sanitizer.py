@@ -59,9 +59,18 @@ _FORBIDDEN_PATTERNS = (
 )
 
 
+_DATEADD_RE = re.compile(
+    # the date argument may hold parenthesized calls, e.g. GETDATE()
+    r"(?i)\bdateadd\s*\(\s*'?(quarter|month|day)'?\s*,\s*(-?\d+)\s*,"
+    r"\s*((?:[^()]|\((?:[^()]|\([^()]*\))*\))+?)\s*\)"
+)
+
+
 def _rewrite_dateadd(sql: str) -> str:
     """D2: DATEADD(part, n, d) → (CAST(d AS DATE) ± INTERVAL 'n' unit),
-    quarter → 3× months (reference api/main.py:600-616)."""
+    quarter → 3× months (reference api/main.py:600-616).  ``d`` may
+    contain balanced parentheses (``GETDATE()``, a nested DATEADD);
+    rewriting repeats until no DATEADD is left."""
 
     def repl(m: re.Match) -> str:
         unit = m.group(1).lower()
@@ -78,11 +87,11 @@ def _rewrite_dateadd(sql: str) -> str:
         sign = "-" if n < 0 else "+"
         return f"(CAST({expr} AS DATE) {sign} INTERVAL '{abs(n)}' {unit_name})"
 
-    return re.sub(
-        r"(?i)\bdateadd\s*\(\s*'?(quarter|month|day)'?\s*,\s*(-?\d+)\s*,\s*([^)]+?)\s*\)",
-        repl,
-        sql,
-    )
+    while True:
+        out = _DATEADD_RE.sub(repl, sql)
+        if out == sql:
+            return out
+        sql = out
 
 
 def extract_select_only(sql: Optional[str]) -> Optional[str]:

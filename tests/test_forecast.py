@@ -12,6 +12,8 @@ from intellect_bi_spark.operators.forecast import (
     forecast_payload,
 )
 
+from .parity import assert_parity
+
 
 def test_clamps():
     assert _clamp(1000, 7, 100) == (365, 7)
@@ -144,3 +146,89 @@ def test_seasonal7_twins_agree_on_short_region(spark):
     tail = [3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0]
     for i in range(1, 15):
         assert a[("North", d0 + dt.timedelta(days=8 + i))] == tail[(i - 1) % 7]
+
+
+# --- window clamp edges against DuckDB ---------------------------------------
+
+
+def _duck_forecast(duck, algo: str, h: int, window: int) -> str:
+    """The forecast rows restated in DuckDB with the reference clamp
+    ``window → [1, n]`` taken from DuckDB's own count of daily points."""
+    from intellect_bi_spark.catalog import sales_cte
+    from intellect_bi_spark.functions.numeric import dsum_sql
+    from intellect_bi_spark.operators.forecast import _daily_cte
+
+    n = duck.execute(
+        sales_cte("SELECT COUNT(DISTINCT date) FROM sales")
+    ).fetchone()[0]
+    w = max(1, min(window, n))
+    if algo == "drift":
+        seed = (
+            ", seeds AS (SELECT MAX(CASE WHEN rn = 1 THEN value END) AS y_t,"
+            f" MAX(CASE WHEN rn = {w} THEN value END) AS y0 FROM ranked)"
+        )
+        value = f"y_t + ((y_t - y0) / {max(w - 1, 1)}) * i"
+    else:
+        seed = (
+            f", seeds AS (SELECT {dsum_sql('value')} / COUNT(value) AS b"
+            f" FROM ranked WHERE rn <= {w})"
+        )
+        value = "CAST(b AS DOUBLE)"
+    return sales_cte(
+        _daily_cte()
+        + seed
+        + f" SELECT 'forecast' AS series, last_date + CAST(i AS INT) AS date,"
+        f" {value} AS value FROM last_d, seeds, generate_series(1, {h}) AS t(i)"
+    )
+
+
+@pytest.mark.parametrize("algo", ["ma7_baseline", "drift"])
+@pytest.mark.parametrize("over", [5, 10**6])
+def test_window_beyond_series_clamps_like_duckdb(spark, sf_dir, duck, algo, over):
+    """A window past the series length clamps to the whole series —
+    both just past it (the top-k collect comes back short) and absurdly
+    past it (the series is counted before the collect)."""
+    n = daily_series(spark, sf_dir).count()
+    window = n + over
+    df = forecast_payload(spark, sf_dir, h=4, algo=algo, window=window)
+    assert_parity(
+        df.filter(F.col("series") == "forecast"),
+        duck,
+        _duck_forecast(duck, algo, 4, window),
+    )
+
+
+def test_drift_window_one_is_flat_like_duckdb(spark, sf_dir, duck):
+    df = forecast_payload(spark, sf_dir, h=6, algo="drift", window=1)
+    fc = df.filter(F.col("series") == "forecast")
+    assert len({r["value"] for r in fc.collect()}) == 1
+    assert_parity(fc, duck, _duck_forecast(duck, "drift", 6, 1))
+
+
+def test_short_series_guards(spark, sf_dir, monkeypatch):
+    """Fewer than 7 daily points: seasonal7 raises, drift still runs on
+    what there is; an empty series forecasts nothing."""
+    from intellect_bi_spark.operators import forecast as fc
+
+    full = fc.daily_series
+    last5 = [
+        r["date"]
+        for r in full(spark, sf_dir).orderBy(F.desc("date")).limit(5).collect()
+    ]
+    monkeypatch.setattr(
+        fc,
+        "daily_series",
+        lambda spark, sf_dir: full(spark, sf_dir).filter(
+            F.col("date").isin(last5)
+        ),
+    )
+    with pytest.raises(ValueError, match=">= 7"):
+        fc._forecast_rows(spark, sf_dir, 3, "seasonal7", 7)
+    rows = fc._forecast_rows(spark, sf_dir, 3, "drift", 30)
+    assert len(rows) == 3 and rows[0]["date"] > max(last5)
+    monkeypatch.setattr(
+        fc,
+        "daily_series",
+        lambda spark, sf_dir: full(spark, sf_dir).filter(F.lit(False)),
+    )
+    assert fc._forecast_rows(spark, sf_dir, 3, "ma7_baseline", 7) == []

@@ -12,6 +12,8 @@ from intellect_bi_spark.plans.sanitizer import (
     sanitize_sql,
 )
 
+from .parity import assert_parity
+
 
 def test_d1_now_functions():
     s = sanitize_sql("SELECT GETDATE(), NOW(), CURRENT_DATE()")
@@ -32,6 +34,22 @@ def test_d2_dateadd():
     assert (
         sanitize_sql("SELECT DATEADD(day, 7, d) FROM sales")
         == "SELECT (CAST(d AS DATE) + INTERVAL '7' DAY) FROM sales"
+    )
+
+
+def test_d2_dateadd_over_a_call():
+    """The date argument may itself hold parentheses: a match that
+    stopped at GETDATE's own ``)`` produced ``CAST(GETDATE( AS DATE)``,
+    which does not parse, so ``run_safe_sql`` refused a safe query."""
+    assert (
+        sanitize_sql("SELECT n FROM t WHERE date < DATEADD(month, -3, GETDATE())")
+        == "SELECT n FROM t WHERE date <"
+        " (CAST(current_timestamp() AS DATE) - INTERVAL '3' MONTH)"
+    )
+    assert (
+        sanitize_sql("SELECT DATEADD(day, 1, DATEADD(month, 2, d))")
+        == "SELECT (CAST((CAST(d AS DATE) + INTERVAL '2' MONTH) AS DATE)"
+        " + INTERVAL '1' DAY)"
     )
 
 
@@ -114,6 +132,26 @@ def test_run_safe_sql_end_to_end(spark, sf_dir):
     )
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["region"] == "North"
+
+
+def test_run_safe_sql_dateadd_over_getdate_matches_duckdb(spark, sf_dir, duck):
+    from intellect_bi_spark.catalog import sales, sales_cte
+
+    sales(spark, sf_dir)  # registers the view
+    df = run_safe_sql(
+        spark,
+        "SELECT gender, COUNT(*) AS n FROM sales_data"
+        " WHERE date < DATEADD(month, -3, GETDATE()) GROUP BY gender",
+    )
+    assert_parity(
+        df,
+        duck,
+        sales_cte(
+            "SELECT gender, COUNT(*) AS n FROM sales"
+            " WHERE date < CAST(current_date - INTERVAL 3 MONTH AS DATE)"
+            " GROUP BY gender"
+        ),
+    )
 
 
 def test_run_safe_sql_rejects_dml(spark):

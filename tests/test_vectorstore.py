@@ -50,6 +50,158 @@ def test_stored_equals_in_memory_ranking(spark, sf_dir):
     assert got == want and len(got) == vs.TOP_K
 
 
+def _spark_formulation_topk(centroids, codebook, codes, emb, qids):
+    """The single-query serve restated as ONE Spark plan over many
+    queries: probe, ADC and rerank as the broadcast joins and per-query
+    windows of ``topk_batch_from_index``, with the single-query
+    candidate rule (every vector but the query).  It shares nothing with
+    the driver-side probe and ADC table the serve computes, so equality
+    proves those are bit-identical to the Spark expressions."""
+    from pyspark.sql import Window
+
+    from intellect_bi_spark.operators.clustering import QUANT, _subspace_rows
+    from intellect_bi_spark.operators.similarity import _dot, _norm
+
+    def first(df, n, *order):
+        rn = F.row_number().over(Window.partitionBy("q_id").orderBy(*order))
+        return df.withColumn("rn", rn).filter(F.col("rn") <= n).drop("rn")
+
+    qv = emb.filter(F.col("vec_id").isin(qids))
+    qs = qv.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    probe = first(
+        centroids.crossJoin(F.broadcast(qs)).select(
+            "q_id",
+            "cell",
+            (_dot("c_emb", "q_emb") / (_norm("c_emb") * _norm("q_emb"))).alias(
+                "q_cos"
+            ),
+        ),
+        vs.N_PROBE,
+        F.desc("q_cos"),
+        "cell",
+    ).select("q_id", "cell")
+    q_sub = _subspace_rows(qv).select(
+        F.col("vec_id").alias("q_id"), "m", F.col("sub").alias("qsub")
+    )
+    adc = (
+        codes.join(F.broadcast(probe), "cell")
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .join(F.broadcast(codebook), ["m", "cid"])
+        .join(F.broadcast(q_sub), ["q_id", "m"])
+        .select(
+            "q_id",
+            "vec_id",
+            F.expr(
+                "CAST(FLOOR(aggregate(zip_with(qsub, carr,"
+                " (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE),"
+                f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT)"
+            ).alias("dq"),
+        )
+        .groupBy("q_id", "vec_id")
+        .agg(F.sum("dq").alias("dist_q"))
+    )
+    cand = first(adc, vs.CAND_K, "dist_q", "vec_id").select("q_id", "vec_id")
+    ranked = first(
+        emb.join(F.broadcast(cand), "vec_id")
+        .join(F.broadcast(qs), "q_id")
+        .select(
+            "q_id",
+            "vec_id",
+            "label",
+            (
+                _dot("embedding", "q_emb")
+                / (_norm("embedding") * _norm("q_emb"))
+            ).alias("cosine"),
+        ),
+        vs.TOP_K,
+        F.desc("cosine"),
+        "vec_id",
+    )
+    out: dict = {}
+    for r in ranked.collect():
+        out.setdefault(r["q_id"], []).append(
+            (r["cosine"], r["vec_id"], r["label"])
+        )
+    return {
+        q: [(v, lab, c) for c, v, lab in sorted(rows, key=lambda t: (-t[0], t[1]))]
+        for q, rows in out.items()
+    }
+
+
+def test_stored_equals_in_memory_ranking_every_7th_query(spark, sf_dir):
+    """Stored ≡ in-memory over every 7th vec_id, not only QUERY_VEC_ID:
+    the serve over the stored index answers each query exactly as the
+    all-Spark formulation over the in-memory index frames does."""
+    emb = _emb(spark, sf_dir)
+    qids = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    qids = sorted(q for q in qids if q % 7 == 0)
+    want = _spark_formulation_topk(*_in_memory_index(spark, sf_dir), emb, qids)
+    tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
+    try:
+        vs.build_index(spark, sf_dir, tmp)
+        centroids, codebook, codes = vs.read_index(spark, tmp)
+        # the stored model as local relations: a query collects them
+        # without a job, as a memoized versioned store's serve does
+        centroids = vs._local_frame(centroids)
+        codebook = vs._local_frame(codebook)
+        for q in qids:
+            got = [
+                (r["vec_id"], r["label"], r["cosine"])
+                for r in vs.topk_from_index(
+                    centroids, codebook, codes, emb, query_vec_id=q
+                ).collect()
+            ]
+            assert got == want[q], q
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    assert len(qids) > 10
+
+
+def test_build_index_keeps_stage_when_a_rename_fails(spark, sf_dir, monkeypatch):
+    """ADVICE r16 #1: after a rename fails partway, the tables not yet
+    renamed exist only in the ``_build-*`` stage, so the stage must
+    survive the failure."""
+    import os
+
+    import pytest
+
+    from intellect_bi_spark.operators import retrieval as rt
+
+    real_fs_of = rt._fs_of
+
+    class _FailingRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            if dst.getName() == "codebook":
+                return False
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def _fs_of(spark, path):
+        fs, hp = real_fs_of(spark, path)
+        return _FailingRename(fs), hp
+
+    monkeypatch.setattr(rt, "_fs_of", _fs_of)
+    tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
+    try:
+        with pytest.raises(IOError):
+            vs.build_index(spark, sf_dir, tmp)
+        stages = [d for d in os.listdir(tmp) if d.startswith("_build-")]
+        assert len(stages) == 1
+        stage = os.path.join(tmp, stages[0])
+        assert sorted(os.listdir(stage)) == ["codebook", "codes"]
+        assert spark.read.parquet(f"{stage}/codebook").count() > 0
+        assert os.path.isdir(os.path.join(tmp, "centroids"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_store_roundtrip_preserves_index_tables(spark, sf_dir):
     centroids, codebook, codes = _in_memory_index(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
