@@ -598,6 +598,9 @@ def _doc_batch_pred():
 
 
 def _term_bucket(col):
+    """A term's bucket — a Column over a term column or a lambda
+    variable (the delete's bucket discovery maps it over token
+    arrays)."""
     return (F.crc32(F.encode(col, "UTF-8")) % N_TB).cast("int")
 
 
@@ -705,22 +708,32 @@ def _run_staged(*thunks) -> None:
     cannot head-of-line block the small lexicon/stats writes on a
     busy cluster.  The pool tag is a thread-local no-op under a FIFO
     session (external callers), where the r15 back-fill behavior is
-    unchanged."""
+    unchanged.
+
+    The pool names derive from the CALLER's pool, read in the calling
+    thread: ``{caller_pool}-staged-{i}``, or ``sgraft-staged-{i}``
+    when the caller set none.  Concurrent callers in different pools
+    (the erasure chains) therefore never queue their staged jobs in a
+    shared pool, while the set of names stays bounded — Spark never
+    removes a pool, so a name per invocation would leak them."""
     if len(thunks) == 1:
         thunks[0]()
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    caller_pool = (
+        sc.getLocalProperty("spark.scheduler.pool") if sc is not None else None
+    )
+    prefix = f"{caller_pool}-staged" if caller_pool else "sgraft-staged"
+
     def _pooled(i: int, t):
         def run() -> None:
-            from pyspark import SparkContext
-
-            sc = SparkContext._active_spark_context
             if sc is not None:
                 try:
-                    sc.setLocalProperty(
-                        "spark.scheduler.pool", f"sgraft-staged-{i}"
-                    )
+                    sc.setLocalProperty("spark.scheduler.pool", f"{prefix}-{i}")
                 except Exception:  # pragma: no cover - exotic contexts
                     pass
             t()
@@ -784,9 +797,14 @@ def _read_segments(
     ``basePath`` keeps seg/bucket as partition columns — normalized to
     the logical posting ``schema`` (seg dropped).  The read passes
     ``schema`` rather than inferring it, which would cost a Spark job
-    per read.  An empty pin list yields an empty frame of the same
-    schema, so serving a store with no matching buckets degrades to
-    zero rows, not an error."""
+    per read.  Listing the pinned directories is driver-side up to
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    paths; past it (a sketch manifest pins 60-90 day dirs) Spark lists
+    them in one job, whose tasks the session caps at one per core
+    (``parallelPartitionDiscovery.parallelism``, session.py) rather
+    than one per directory.  An empty pin list yields an empty frame
+    of the same schema, so serving a store with no matching buckets
+    degrades to zero rows, not an error."""
     cols = [c.split()[0] for c in schema.split(",")]
     dirs = sorted({f"{root}/seg={s}/{pcol}={t}" for s, t in entries})
     if not dirs:
@@ -1654,6 +1672,33 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_DELETE_RES = 3  # erase set: doc_id % 10 == 3 (~10% of the corpus)
 
 
+def _bm25_delete_facts(toks: DataFrame) -> tuple[list[int], int, int]:
+    """(affected buckets, n_docs, sum_len) of the tokenized docs being
+    deleted, from ONE aggregate: :func:`_stats2_of`'s two BIGINTs and
+    the OR of each doc's bucket bitmask — bit b is set iff one of its
+    tokens falls in bucket b under :func:`_term_bucket`, so the set
+    bits are exactly the distinct ``tb`` of the docs' postings.  The
+    mask is O(1) aggregate state however many docs are deleted."""
+    mask = F.aggregate(
+        F.transform("toks", _term_bucket),
+        F.lit(0).cast("bigint"),
+        lambda acc, b: acc.bitwiseOR(
+            F.call_function("shiftleft", F.lit(1).cast("bigint"), b)
+        ),
+    )
+    r = toks.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size("toks")).alias("sum_len"),
+        F.bit_or(mask).alias("mask"),
+    ).first()
+    bits = r["mask"] or 0
+    return (
+        [b for b in range(N_TB) if bits >> b & 1],
+        r["n_docs"],
+        r["sum_len"] or 0,
+    )
+
+
 def delete_from_bm25_index(
     spark: SparkSession, path: str, del_docs: DataFrame
 ) -> list[int]:
@@ -1675,23 +1720,22 @@ def delete_from_bm25_index(
     postings + the vocabulary-bounded lexicon merge — never a corpus
     rescan.
 
-    Optimization (r15, guide §2.6 + §5): the deleted docs' tokenized /
-    posting frames are pinned for the leg (the bucket-discovery
-    collect, the df-decrement aggregate and the stats decrement each
-    re-derived them before — three tokenize passes per erasure), and
-    the three independent staged writes (surviving-postings segment,
-    lexicon v+1, stats v+1) run as concurrent jobs gated by the one
-    publish."""
+    Optimization (r15, guide §2.6 + §5): the deleted docs' tokenized
+    frame is pinned for the leg, and the three independent staged
+    writes (surviving-postings segment, lexicon v+1, stats v+1) run as
+    concurrent jobs gated by the one publish.  The affected buckets and
+    the deleted (n_docs, sum_len) come from ONE aggregate over the
+    tokens (:func:`_bm25_delete_facts`), and the stats leg subtracts
+    them as literals — no postings shuffle before the staged writes,
+    and no broadcast of a 1-row relation."""
     from pyspark import StorageLevel
 
     toks = _toks_of(del_docs).persist(StorageLevel.MEMORY_AND_DISK)
-    dp = _postings_of(toks).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        buckets = sorted(
-            r["tb"] for r in dp.select("tb").distinct().collect()
+        buckets, n_del, len_del = _bm25_delete_facts(toks)
+        ddf = _postings_of(toks).groupBy("term").agg(
+            F.count(F.lit(1)).alias("ddf")
         )
-        ddf = dp.groupBy("term").agg(F.count(F.lit(1)).alias("ddf"))
-        ds = _stats2_of(toks)
         del_ids = del_docs.select("doc_id")
         root = f"{path}/postings"
         last: VersionConflict | None = None
@@ -1717,25 +1761,12 @@ def delete_from_bm25_index(
                 )
 
             def _stage_stats(v=v, att=att) -> None:
-                old_stats = spark.read.schema(_BM25_STATS_SCHEMA).parquet(
-                    _table_dir(spark, path, "stats", v)
-                )
                 (
-                    old_stats.select(
-                        F.col("n_docs").alias("n0"),
-                        F.col("sum_len").alias("s0"),
-                    )
-                    .crossJoin(
-                        F.broadcast(
-                            ds.select(
-                                F.col("n_docs").alias("n1"),
-                                F.col("sum_len").alias("s1"),
-                            )
-                        )
-                    )
+                    spark.read.schema(_BM25_STATS_SCHEMA)
+                    .parquet(_table_dir(spark, path, "stats", v))
                     .select(
-                        (F.col("n0") - F.col("n1")).alias("n_docs"),
-                        (F.col("s0") - F.col("s1")).alias("sum_len"),
+                        (F.col("n_docs") - F.lit(n_del)).alias("n_docs"),
+                        (F.col("sum_len") - F.lit(len_del)).alias("sum_len"),
                     )
                     .write.mode("overwrite")
                     .parquet(_stage_path(path, "stats", v + 1, att))
@@ -1778,7 +1809,6 @@ def delete_from_bm25_index(
                 last = e  # re-derive survivors against the new latest
         raise last if last is not None else RuntimeError("unreachable")
     finally:
-        dp.unpersist()
         toks.unpersist()
 
 
@@ -3381,20 +3411,34 @@ def serve_bm25_batch_from_store(
     union of the batch's term buckets, the pushed term IN-filter on
     the scan, the pinned version's df and corpus stats as literals
     (:func:`_version_state`), per-(qid, doc) term-ordered fold, per-
-    query window top-k."""
+    query window top-k.
+
+    The batch is literal too: each posting takes the qids of the
+    queries holding its term by exploding a CASE on the term — the
+    same rows a join with the (qid, term) table yields, without the
+    job that ships that table.  At most BM25_BATCH_K rows per query
+    survive the window, so the final order is a sort inside one
+    partition rather than a range sort, whose bounds sampling is a
+    job of its own."""
     from pyspark.sql import Window
 
     if v is None:
         v = _latest_version(spark, path)
     all_terms = sorted({t for _, ts in BM25_BATCH for t in ts})
     state = _version_state(spark, path, v)
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in BM25_BATCH for t in ts],
-        "qid int, term string",
+    qids_of = F.expr(
+        "CASE term "
+        + " ".join(
+            f"WHEN '{t}' THEN array("
+            + ", ".join(str(qid) for qid, ts in BM25_BATCH if t in ts)
+            + ")"
+            for t in all_terms
+        )
+        + " END"
     )
     per = _bm25_fold(
-        _pinned_postings(spark, path, state, all_terms).join(
-            F.broadcast(q), "term"
+        _pinned_postings(spark, path, state, all_terms).withColumn(
+            "qid", F.explode(qids_of)
         ),
         state.df_of,
         state.n_docs,
@@ -3405,7 +3449,8 @@ def serve_bm25_batch_from_store(
     return (
         per.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= BM25_BATCH_K)
-        .orderBy("qid", "rank")
+        .coalesce(1)
+        .sortWithinPartitions("qid", "rank")
     )
 
 

@@ -75,6 +75,13 @@ from .similarity import (
 
 CAND_K = 40  # ADC candidates entering the exact rerank (4× the final k)
 
+# the stored model tables' schemas (flat and versioned stores alike)
+_ANN_CENTROIDS_SCHEMA = "cell int, c_emb array<float>"
+_ANN_CODEBOOK_SCHEMA = "m bigint, cid bigint, carr array<double>"
+# the flat store's code table keeps _pq_codes' bigint m (the versioned
+# segments narrow it to int, _ANN_CODES_SCHEMA)
+_ANN_FLAT_CODES_SCHEMA = "vec_id bigint, m bigint, cid bigint, cell int"
+
 
 def _centroids(emb: DataFrame) -> DataFrame:
     """The IVF coarse quantizer (similarity.py:421 deterministic seed:
@@ -100,9 +107,12 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     later reader consumes silently.  The three tables therefore stage
     into a build-unique temp dir and are RENAMED into place only after
     all three jobs complete: a failed build leaves only ``_build-*``
-    debris (never a readable partial table), and the rename is a cheap
-    driver-side metadata op.  A rename that fails partway keeps the
-    stage — its remaining tables are then the build's only copy.
+    debris (never a readable partial table).  On HDFS and local disks
+    the rename is a cheap driver-side metadata op; on S3A it is a
+    non-atomic copy of the table's data, so there the window in which
+    a reader can see a partial table is as long as that copy.  A
+    rename that fails partway keeps the stage — its remaining tables
+    are then the build's only copy.
     Rebuilding over an existing store keeps a delete-then-rename
     window per table — still strictly smaller than v2's task-level
     partial-write exposure, and no current caller rebuilds in place
@@ -351,10 +361,12 @@ def topk_batch_from_index(
 def read_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three tables :func:`build_index` writes, read with their
+    known schemas (inferring each would cost a Spark job)."""
     return (
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/codebook"),
-        spark.read.parquet(f"{path}/codes"),
+        spark.read.schema(_ANN_CENTROIDS_SCHEMA).parquet(f"{path}/centroids"),
+        spark.read.schema(_ANN_CODEBOOK_SCHEMA).parquet(f"{path}/codebook"),
+        spark.read.schema(_ANN_FLAT_CODES_SCHEMA).parquet(f"{path}/codes"),
     )
 
 
@@ -541,10 +553,6 @@ def _ann_pinned_codes(
         _ANN_CODES_SCHEMA,
         pcol="cell",
     )
-
-
-_ANN_CENTROIDS_SCHEMA = "cell int, c_emb array<float>"
-_ANN_CODEBOOK_SCHEMA = "m bigint, cid bigint, carr array<double>"
 
 
 def _sql_literal(v) -> str:

@@ -43,10 +43,12 @@ ONE_SHOT_CONVERTED = (
 
 @pytest.mark.parametrize("name", ONE_SHOT_CONVERTED)
 def test_one_shot_pin_released_after_action(name, spark, sf_dir):
-    # first invocation may register documented SESSION-LIFETIME shared
-    # relations (the LSH band pin) — the leak check is the steady-state
-    # delta across a repeat invocation, which must be exactly zero
-    QUERIES[name](spark, sf_dir).collect()
+    # only corpus_prep_funnel's first invocation may register a
+    # documented SESSION-LIFETIME shared relation (the LSH band pin), so
+    # only it is warmed up; every other query's FIRST invocation must
+    # leave the pin count exactly where it found it
+    if name == "corpus_prep_funnel":
+        QUERIES[name](spark, sf_dir).collect()
     before = len(windows._PERSISTED)
     rows = QUERIES[name](spark, sf_dir).collect()
     assert rows  # the eager action really ran and produced output

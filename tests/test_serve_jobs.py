@@ -14,7 +14,15 @@ group and counts that group's jobs through
   candidates' broadcast and the rerank;
 - forecast seeds: one top-k collect, for every algorithm (the
   ma7_baseline mean is evaluated over the collected values without a
-  job).
+  job);
+- a BM25 batch serve of a version already read: the fold's and the
+  window's shuffles and the result — no job ships the query table or
+  samples a range sort;
+- a BM25 delete's bucket discovery: one aggregate over the deleted
+  docs' tokens.
+
+A read of more than 32 pinned directories lists them in a Spark job;
+its guard bounds that job's tasks by the cores, not the directories.
 """
 
 from __future__ import annotations
@@ -25,14 +33,19 @@ import uuid
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from intellect_bi_spark.catalog import load_tables
 from intellect_bi_spark.operators import forecast as fc
 from intellect_bi_spark.operators import retrieval as rt
+from intellect_bi_spark.operators import sketches as sk
 from intellect_bi_spark.operators import vectorstore as vs
 from intellect_bi_spark.operators.similarity import _emb
 
 
-def _jobs(spark, fn) -> int:
-    """Jobs ``fn`` launches, counted through a fresh job group."""
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the jobs ``fn`` launches, found through a fresh job
+    group."""
     sc = spark.sparkContext
     group = f"serve-jobs-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, "job-count guard")
@@ -40,13 +53,19 @@ def _jobs(spark, fn) -> int:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs(spark, fn) -> int:
+    """Jobs ``fn`` launches."""
+    return len(_job_ids(spark, fn))
 
 
 @pytest.fixture(scope="module")
 def stores(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_servejobs_")
     rt.build_bm25_index_v2(spark, sf_dir, f"{tmp}/bm25")
+    rt._init_bm25_store(rt._base_docs(spark, sf_dir), f"{tmp}/bm25_full")
     vs.build_index_frozen_full(spark, sf_dir, f"{tmp}/ann")
     yield tmp
     shutil.rmtree(tmp, ignore_errors=True)
@@ -86,3 +105,65 @@ def test_forecast_seed_jobs(spark, sf_dir, algo):
         lambda: fc.forecast_payload(spark, sf_dir, h=9, algo=algo, window=10),
     )
     assert n <= 2, n
+
+
+def test_warm_bm25_batch_serve_launches_at_most_three_jobs(
+    spark, duck, stores
+):
+    path = f"{stores}/bm25_full"
+    rt.serve_bm25_batch_from_store(spark, path).collect()  # reads the version
+    got: list = []
+    n = _jobs(
+        spark,
+        lambda: got.extend(rt.serve_bm25_batch_from_store(spark, path).collect()),
+    )
+    want = duck.execute(rt._bm25_batch_oracle()).fetchall()
+    assert [tuple(r) for r in got] == want and want  # rows AND order
+    assert n <= 3, n
+
+
+def test_sketch_serve_lists_many_dirs_one_task_per_core(spark, sf_dir):
+    """Two segments over the fixture's 30 days pin 60 day dirs — past
+    the 32-path threshold, so the serve lists them in a job."""
+    ev = load_tables(spark, sf_dir)["events"].filter(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+    )
+    tmp = tempfile.mkdtemp(prefix="sgraft_sketchjobs_")
+    try:
+        sk._init_sketch_store(ev.filter(F.col("user_id") % 2 == 0), tmp)
+        sk.upsert_sketch_rollup_store(ev.filter(F.col("user_id") % 2 == 1), tmp)
+        pins = rt._manifest_entries(spark, tmp, rt._latest_version(spark, tmp))
+        assert len(pins) > 32, len(pins)
+        jobs = _job_ids(
+            spark, lambda: sk.serve_sketch_rollup_from_store(spark, tmp).collect()
+        )
+        tracker = spark.sparkContext.statusTracker()
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in jobs
+            for s in tracker.getJobInfo(j).stageIds
+            if tracker.getStageInfo(s) is not None
+        ]
+        assert tasks
+        assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_bm25_delete_discovery_launches_at_most_three_jobs(spark, sf_dir):
+    """The buckets and stats equal the postings-derived ones the delete
+    used before; delete ≡ rebuild-without-the-docs is
+    test_vectorstore.test_bm25_delete_equals_rebuild_without_docs."""
+    docs = rt._base_docs(spark, sf_dir)
+    dels = docs.filter(F.col("doc_id") % rt.DOC_UPSERT_MOD == rt.DOC_DELETE_RES)
+    toks = rt._toks_of(dels)
+    facts: list = []
+    n = _jobs(spark, lambda: facts.append(rt._bm25_delete_facts(toks)))
+    assert n <= 3, n
+    buckets, n_del, len_del = facts[0]
+    want_buckets = sorted(
+        r["tb"] for r in rt._postings_of(toks).select("tb").distinct().collect()
+    )
+    want_stats = rt._stats2_of(toks).first()
+    assert buckets == want_buckets and buckets
+    assert (n_del, len_del) == (want_stats["n_docs"], want_stats["sum_len"])

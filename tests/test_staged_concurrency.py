@@ -49,3 +49,52 @@ def test_run_staged_single_thunk_runs_inline():
     tid = []
     _run_staged(lambda: tid.append(threading.get_ident()))
     assert tid == [threading.get_ident()]
+
+
+def test_run_staged_pools_derive_from_the_callers_pool(spark):
+    """Concurrent callers in different scheduler pools stage their
+    jobs in distinct pools (``{caller_pool}-staged-{i}``); a caller
+    with no pool gets ``sgraft-staged-{i}``."""
+    sc = spark.sparkContext
+    seen: dict = {}
+    lock = threading.Lock()
+    both_in = threading.Barrier(2)
+
+    def caller(pool):
+        sc.setLocalProperty("spark.scheduler.pool", pool)
+        try:
+
+            def thunk(i):
+                def t():
+                    with lock:
+                        seen[(pool, i)] = sc.getLocalProperty(
+                            "spark.scheduler.pool"
+                        )
+
+                return t
+
+            both_in.wait()  # the two callers' _run_staged overlap
+            _run_staged(thunk(0), thunk(1))
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
+
+    threads = [
+        threading.Thread(target=caller, args=(p,)) for p in ("chain-a", "chain-b")
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert seen == {
+        ("chain-a", 0): "chain-a-staged-0",
+        ("chain-a", 1): "chain-a-staged-1",
+        ("chain-b", 0): "chain-b-staged-0",
+        ("chain-b", 1): "chain-b-staged-1",
+    }
+
+    got = []
+    _run_staged(
+        lambda: got.append(sc.getLocalProperty("spark.scheduler.pool")),
+        lambda: got.append(sc.getLocalProperty("spark.scheduler.pool")),
+    )
+    assert sorted(got) == ["sgraft-staged-0", "sgraft-staged-1"]
