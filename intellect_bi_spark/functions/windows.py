@@ -290,3 +290,36 @@ def last_k_by(df: DataFrame, order_col: str, k: int) -> DataFrame:
     idiomatic replacement for ``row_number() OVER (ORDER BY c DESC) <= k``
     on a frame with no partition key."""
     return df.orderBy(F.desc(order_col)).limit(k)
+
+
+def latest_with_prev(
+    df: DataFrame, order_col: str, value_col: str, prev_col: str
+) -> DataFrame:
+    """``SELECT order_col, value_col, LAG(value_col) OVER (ORDER BY
+    order_col) AS prev_col … ORDER BY order_col DESC LIMIT 1`` without a
+    window: the latest row and its predecessor are the top-2 by
+    ``order_col`` (:func:`last_k_by`), and one aggregate over those ≤2
+    rows picks the latest value (``max_by``) and, only when there are
+    two rows, the earlier one (``min_by``).  Nothing is persisted.
+
+    NULL order keys sort last both ways (SQL's NULLS LAST default):
+    the latest row is the largest non-NULL key (a NULL-keyed row only
+    when it is the sole row), and a NULL-keyed row is never a
+    predecessor.  The aggregate groups on a constant, so an empty
+    ``df`` yields 0 rows, like the LIMIT 1 of an empty frame.
+    ``order_col`` must be unique per row (any ``groupBy(period)``
+    aggregate)."""
+    key = F.col(order_col)
+    return (
+        last_k_by(df, order_col, 2)
+        .groupBy(F.lit(True).alias("_sg_one"))
+        .agg(
+            F.max(key).alias(order_col),
+            # (key IS NOT NULL, key) ranks a NULL key below every other
+            F.max_by(value_col, F.struct(key.isNotNull(), key)).alias(
+                value_col
+            ),
+            F.when(F.count(key) == 2, F.min_by(value_col, key)).alias(prev_col),
+        )
+        .drop("_sg_one")
+    )

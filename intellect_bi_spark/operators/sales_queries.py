@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import sales, sales_cte
-from ..functions.windows import lag_stitched
+from ..functions.windows import lag_stitched, latest_with_prev
 from ..functions.numeric import (
     davg,
     davg_sql,
@@ -246,7 +246,7 @@ def last_two_quarters_satisfaction(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# --- QoQ delta (intent template, api/main.py:461-496): J3 as window lag ------
+# --- QoQ delta (intent template, api/main.py:461-496): J3 as a top-2 ---------
 
 
 def qoq_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,11 +255,8 @@ def qoq_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(_quarter().alias("qtr"))
         .agg(dsum("sales").alias("total_sales"))
     )
-    return (
-        lag_stitched(q, "qtr", "total_sales", "prev_total")
-        .orderBy(F.desc("qtr"))
-        .limit(1)
-        .withColumn("qoq_delta", F.col("total_sales") - F.col("prev_total"))
+    return latest_with_prev(q, "qtr", "total_sales", "prev_total").withColumn(
+        "qoq_delta", F.col("total_sales") - F.col("prev_total")
     )
 
 

@@ -233,13 +233,14 @@ def topk_from_index(
     probe = _probe(centroids.collect(), q) if q else []
     adc = _adc_table(codebook.collect(), q)
     stride = max((cid for _, cid in adc), default=0) + 1
-    lut = F.create_map(
-        *[
-            x
-            for (m, cid), dq in sorted(adc.items())
-            for x in (F.lit(m * stride + cid).cast("bigint"),
-                      F.lit(dq).cast("bigint"))
-        ]
+    # the table and the query vector are each ONE expression text: a
+    # Column per literal is a Py4J round trip apiece (2·|codebook| + dim)
+    lut = F.expr(
+        "map("
+        + ", ".join(
+            f"{m * stride + cid}L, {dq}L" for (m, cid), dq in sorted(adc.items())
+        )
+        + ")"
     )
     # partition-pruned ADC scan: only probed cells' code files are read
     dists = (
@@ -255,7 +256,9 @@ def topk_from_index(
         .agg(F.sum("dq").alias("dist_q"))
     )
     cand = dists.orderBy("dist_q", "vec_id").limit(CAND_K)
-    q_emb = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    q_emb = F.expr(
+        f"CAST({_sql_literal([float(x) for x in q])} AS array<double>)"
+    )
     # exact full-precision rerank: only CAND_K base vectors are fetched
     return (
         emb.join(F.broadcast(cand), "vec_id")

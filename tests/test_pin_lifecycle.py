@@ -119,3 +119,22 @@ def test_graph_queries_read_cached_adjacency_in_plan(spark, sf_dir):
     for p in pins:
         p.unpersist()
     graph.reset_caches()
+
+
+def test_qoq_question_adds_no_pin(spark, sf_dir):
+    """The QoQ template is a top-2 over the per-quarter aggregate: a
+    question pins nothing, so a stream of new questions cannot fill
+    windows._PERSISTED up to its cap."""
+    from intellect_bi_spark.plans.intent import answer_question
+
+    before = list(windows._PERSISTED)
+    df, template = answer_question(
+        spark, sf_dir, "How did sales change compared to last quarter?"
+    )
+    assert template == "qoq_delta" and df.collect()
+    for name in ("nl_qoq_delta", "qoq_delta"):
+        assert QUERIES[name](spark, sf_dir).collect()
+    after = list(windows._PERSISTED)
+    assert len(after) == len(before) and all(
+        a is b for a, b in zip(after, before)
+    ), f"{len(after) - len(before)} new pin(s)"

@@ -19,7 +19,13 @@ group and counts that group's jobs through
   window's shuffles and the result — no job ships the query table or
   samples a range sort;
 - a BM25 delete's bucket discovery: one aggregate over the deleted
-  docs' tokens.
+  docs' tokens;
+- a compare question (YoY by quarter, last two quarters, QoQ) on the
+  cached ``sales`` view: one scan of the view, its aggregate's jobs and
+  at most one more (the YoY lag's shuffle) — no self-join, no
+  subquery over the view, no pinned frame;
+- the view dictionary (dimension values and latest quarters): one
+  aggregate.
 
 A read of more than 32 pinned directories lists them in a Spark job;
 its guard bounds that job's tasks by the cores, not the directories.
@@ -41,6 +47,7 @@ from intellect_bi_spark.operators import retrieval as rt
 from intellect_bi_spark.operators import sketches as sk
 from intellect_bi_spark.operators import vectorstore as vs
 from intellect_bi_spark.operators.similarity import _emb
+from intellect_bi_spark.plans import intent
 
 
 def _job_ids(spark, fn) -> list[int]:
@@ -167,3 +174,56 @@ def test_bm25_delete_discovery_launches_at_most_three_jobs(spark, sf_dir):
     want_stats = rt._stats2_of(toks).first()
     assert buckets == want_buckets and buckets
     assert (n_del, len_del) == (want_stats["n_docs"], want_stats["sum_len"])
+
+
+def test_view_dictionary_is_one_aggregate_and_matches_distincts(spark, sf_dir):
+    """The dictionary equals the per-dimension DISTINCT it replaces, and
+    the quarter set equals the view's two latest quarters."""
+    intent.sales(spark, sf_dir).count()  # materializes the cached view
+    view = intent.sales(spark, sf_dir).select("*")  # a fresh frame object
+    facts: list = []
+    assert _jobs(spark, lambda: facts.append(intent.view_dictionary(view))) <= 2
+    assert intent.view_dictionary(view) is facts[0]  # memoized on the view
+    for d in ("region", "product", "gender"):
+        rows = view.select(d).where(F.col(d).isNotNull()).distinct().collect()
+        want = sorted({str(r[0]).strip() for r in rows}, key=str.lower)
+        assert facts[0].dims[d] == want
+    qtr = F.date_trunc("quarter", F.col("date")).cast("date")
+    want_q = [
+        r[0]
+        for r in view.select(qtr.alias("q")).distinct()
+        .orderBy(F.desc("q")).limit(2).collect()
+    ]
+    assert list(facts[0].last2_quarters) == want_q
+    assert intent.distinct_values(spark, sf_dir) == facts[0].dims
+
+
+COMPARE_QUESTIONS = [
+    ("Compare year-over-year sales performance by quarter.", "yoy_by_quarter", 3),
+    (
+        "Show average satisfaction for the two most recent quarters by region",
+        "last2_quarters",
+        2,
+    ),
+    ("How did sales change compared to last quarter?", "qoq_delta", 2),
+    ("quarterly revenue in South compared to last quarter", "qoq_delta", 2),
+]
+
+
+@pytest.mark.parametrize("question,template,max_jobs", COMPARE_QUESTIONS)
+def test_compare_question_scans_the_view_once(
+    spark, sf_dir, question, template, max_jobs
+):
+    def ask():
+        df, name = intent.answer_question(spark, sf_dir, question)
+        assert name == template
+        return df
+
+    want = ask().collect()  # materializes the view and its dictionary
+    df = ask()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("InMemoryTableScan") == 1, plan
+    got: list = []
+    n = _jobs(spark, lambda: got.extend(ask().collect()))
+    assert got == want and got
+    assert n <= max_jobs, n
