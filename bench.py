@@ -409,7 +409,8 @@ def main() -> None:
         _stage = [
             _pool.submit(vectorstore.build_index, spark, sf_dir, ann_store),
             _pool.submit(
-                retrieval.build_bm25_index, spark, sf_dir, bm25_store
+                retrieval._init_bm25_store,
+                retrieval._base_docs(spark, sf_dir), bm25_store,
             ),
             _pool.submit(
                 sketches.build_sketch_rollup_store,
@@ -476,7 +477,7 @@ def main() -> None:
     def _bm25_serve_only() -> None:
         # the EXACT composition the bit-exact parity unit verifies
         # (tests/test_vectorstore.py::test_bm25_stored_equals_direct_ranking)
-        retrieval.serve_bm25_from_store(spark, bm25_store).collect()
+        retrieval.serve_bm25_v2(spark, bm25_store).collect()
 
     def _sketch_serve_only() -> None:
         # the production rollup query: merge stored day-partitioned HLL

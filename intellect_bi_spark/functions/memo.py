@@ -84,7 +84,7 @@ class SessionMemo:
     def __init__(self, cap: int = MEMO_CAP) -> None:
         self._entries: dict[tuple[str, str], tuple[Any, Any]] = {}
         self._cap = cap
-        # Concurrent driver threads (erasure_e2e chains, _run_staged
+        # Concurrent driver threads (erasure_e2e chains, vstore.run_staged
         # thunks, bench staging pool) reach this registry; an unlocked
         # same-key put race can unpersist a payload another thread's
         # in-flight job is consuming, and a concurrent delete during

@@ -96,7 +96,7 @@ _PERSISTED_CAP = 128  # long-lived sessions that never call reset_caches
 # returned DataFrame re-collected later simply recomputes (correct,
 # just unmaterialized). Same concern ADVICE r4 raised for the CC loop.
 _PERSISTED_LOCK = threading.Lock()
-# Concurrent driver threads (erasure_e2e chains, _run_staged thunks)
+# Concurrent driver threads (erasure_e2e chains, vstore.run_staged thunks)
 # read-modify-write _PERSISTED; unlocked, a register/release race can
 # lose an entry (leaked pin) or double-evict (ADVICE r15).  The locked
 # sections are list ops + unpersist bookkeeping — tiny.

@@ -24,6 +24,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from .vstore import (
+    RETAIN_VERSIONS,
+    VersionConflict,
+    commit_next,
+    latest_version,
+    manifest_entries,
+    new_seg_id,
+    published_versions,
+    read_segments,
+    run_upsert_stream,
+    seg_buckets,
+    vacuum_versioned_store,
+    write_segment,
+)
 
 # lgConfigK=14 → relative standard error ~0.8%, so the 6% band is ~7.3σ
 # PER DAY: the query emits one in-bounds flag per day, and with hundreds
@@ -105,17 +119,15 @@ def _write_sketch_segment(
 ) -> tuple[str, list[str]]:
     """Write one immutable rollup SEGMENT (day-partitioned) and return
     (segment id, the day list it actually produced on disk) — the
-    sketch-store instance of the retrieval.py segment discipline
+    sketch-store instance of the vstore.py segment discipline
     (r15, VERDICT r14 #3 option A: the store is now manifest-pinned,
     upgrading the r14 documented read-committed-per-day contract to
     snapshot isolation).  The partition axis is the calendar day as a
-    STRING — `_seg_buckets(coerce=str)` reads it back verbatim and the
+    STRING — `seg_buckets(coerce=str)` reads it back verbatim and the
     manifest JSON round-trips it untouched."""
-    from .retrieval import _new_seg_id, _seg_buckets, _write_segment
-
-    seg = _new_seg_id()
-    _write_segment(cells, f"{path}/{_SK_ROOT}", seg, pcol="day_part")
-    days = _seg_buckets(
+    seg = new_seg_id()
+    write_segment(cells, f"{path}/{_SK_ROOT}", seg, pcol="day_part")
+    days = seg_buckets(
         spark, f"{path}/{_SK_ROOT}", seg, pcol="day_part", coerce=str
     )
     return seg, days
@@ -129,13 +141,15 @@ def _init_sketch_store(
     rollup carries no lexicon/stats twin — serve is a pure union over
     the pinned cells, so the manifest is the only versioned
     metadata)."""
-    from .retrieval import _new_att, _publish_version, _write_manifest
-
     spark = ev.sparkSession
-    seg, days = _write_sketch_segment(spark, path, _rollup_cells(ev))
-    att = _new_att()
-    _write_manifest(spark, path, 1, [(seg, d) for d in days], att)
-    _publish_version(spark, path, 1, att, bid)
+
+    def stage(base: int, v: int, att: str):
+        if base:
+            raise VersionConflict(f"{path} already published v={base}")
+        seg, days = _write_sketch_segment(spark, path, _rollup_cells(ev))
+        return [(seg, d) for d in days], None
+
+    commit_next(spark, path, stage, bid)
 
 
 def build_sketch_rollup_store(
@@ -163,15 +177,13 @@ def serve_sketch_rollup_from_store(
     pinned at v mid-erasure sees the complete pre-delete rollup).
     This exact composition is what ``sketch_rollup_store`` self-checks
     against the exact recompute (so the timed path and the verified
-    path cannot drift, the serve_bm25_from_store discipline)."""
-    from .retrieval import _latest_version, _manifest_entries, _read_segments
-
+    path cannot drift, the serve_bm25_v2 discipline)."""
     if v is None:
-        v = _latest_version(spark, path)
-    cells = _read_segments(
+        v = latest_version(spark, path)
+    cells = read_segments(
         spark,
         f"{path}/{_SK_ROOT}",
-        _manifest_entries(spark, path, v),
+        manifest_entries(spark, path, v),
         _SK_CELL_SCHEMA,
         pcol="day_part",
     )
@@ -1000,34 +1012,19 @@ def upsert_sketch_rollup_store(
     :func:`sketch_rollup_upsert`, extracted so bench.py's
     ``sketch_upsert_only`` metric can stage the base store untimed and
     time only the append — VERDICT r12 #7.)"""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
     spark = batch_events.sparkSession
     seg, days = _write_sketch_segment(
         spark, path, _rollup_cells(batch_events)
     )
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v) + [
-            (seg, d) for d in days
-        ]
-        _write_manifest(spark, path, v + 1, entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    commit_next(
+        spark,
+        path,
+        lambda v, nxt, att: (
+            manifest_entries(spark, path, v) + [(seg, d) for d in days],
+            None,
+        ),
+        bid,
+    )
 
 
 def sketch_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,16 +1156,6 @@ def delete_users_from_sketch_store(
     cannot subtract).
     tests/test_sketch_upsert.py::test_sketch_delete_pinned_reader_snapshot
     locks the mid-delete visibility."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
     affected = sorted(
         str(r["day"])
         for r in ev_base.filter(del_pred)
@@ -1188,21 +1175,15 @@ def delete_users_from_sketch_store(
         _rollup_cells(surv).repartition(len(affected), "day_part"),
     )
     hit = set(affected)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v)
-        new_entries = [e for e in entries if e[1] not in hit] + [
-            (seg, d) for d in survivor_days
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return affected
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    return commit_next(
+        spark,
+        path,
+        lambda v, nxt, att: (
+            [e for e in manifest_entries(spark, path, v) if e[1] not in hit]
+            + [(seg, d) for d in survivor_days],
+            affected,
+        ),
+    )
 
 
 def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -1218,22 +1199,10 @@ def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
     pinned at v keeps the pre-compact cells; vacuum reclaims them.
     Returns (entries before, entries after) — the manifest-size
     shrink, both metadata-bounded."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _read_segments,
-        _write_manifest,
-    )
 
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        entries = _manifest_entries(spark, path, v)
-        cells = _read_segments(
+    def stage(v: int, nxt: int, att: str):
+        entries = manifest_entries(spark, path, v)
+        cells = read_segments(
             spark, f"{path}/{_SK_ROOT}", entries, _SK_CELL_SCHEMA,
             pcol="day_part",
         )
@@ -1247,31 +1216,22 @@ def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
             .withColumn("day_part", F.col("day").cast("string"))
         )
         seg, days = _write_sketch_segment(spark, path, merged)
-        att = _new_att()
         new_entries = [(seg, d) for d in days]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return len(entries), len(new_entries)
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        return new_entries, (len(entries), len(new_entries))
+
+    return commit_next(spark, path, stage)
 
 
 def vacuum_sketch_store(
-    spark: SparkSession, path: str, keep_last: int | None = None
+    spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
 ) -> int:
     """Retention vacuum for the sketch store: keep the newest
     ``keep_last`` published versions, sweep dangling unpublished
     version dirs, and GC every rollup segment no retained manifest
-    pins (see retrieval._vacuum_versioned_store for the contract and
+    pins (see vstore.vacuum_versioned_store for the contract and
     the single-writer assumption — the machinery is shared verbatim;
     only the table/segment roots differ)."""
-    from .retrieval import RETAIN_VERSIONS, _vacuum_versioned_store
-
-    if keep_last is None:
-        keep_last = RETAIN_VERSIONS
-    return _vacuum_versioned_store(
+    return vacuum_versioned_store(
         spark, path, ("manifests",), (_SK_ROOT,), keep_last
     )
 
@@ -1496,14 +1456,12 @@ def sketch_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_vacuum_")
     try:
-        from .retrieval import _published_versions
-
         _init_sketch_store(ev.filter(~is_batch_day), tmp)
         upsert_sketch_rollup_store(ev.filter(is_batch_day), tmp)
         delete_users_from_sketch_store(spark, tmp, ev, _del_users_pred())
-        n_before = len(_published_versions(spark, tmp))
+        n_before = len(published_versions(spark, tmp))
         vacuum_sketch_store(spark, tmp, keep_last=1)
-        n_purged = n_before - len(_published_versions(spark, tmp))
+        n_purged = n_before - len(published_versions(spark, tmp))
         surv = ev.filter(~_del_users_pred())
         merged = serve_sketch_rollup_from_store(spark, tmp)
         exact = surv.groupBy("event_type").agg(
@@ -1578,8 +1536,6 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_crud_")
     try:
-        from .retrieval import _published_versions
-
         # the exact self-check aggregate depends only on the base
         # fact, not on the store — run it as a concurrent driver job
         # while the whole mutation chain runs (optimization r16, guide
@@ -1601,9 +1557,9 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, tmp, ev, _del_users_pred()
             )
             _, n_after = compact_sketch_store(spark, tmp)
-            n_before_vac = len(_published_versions(spark, tmp))
+            n_before_vac = len(published_versions(spark, tmp))
             vacuum_sketch_store(spark, tmp, keep_last=1)
-            n_purged = n_before_vac - len(_published_versions(spark, tmp))
+            n_purged = n_before_vac - len(published_versions(spark, tmp))
             exact = _f_exact.result()
         merged = serve_sketch_rollup_from_store(spark, tmp)
         tele = (
@@ -1694,78 +1650,8 @@ ORACLES["sketch_crud_chain"] = (
 # commutative over cells, so ANY batch split of the fact — including
 # splits that land partial days in different micro-batches — composes
 # to the same served estimates; no version chain or frozen model is
-# needed.  The foreachBatch sink is the certified append
-# (upsert_sketch_rollup_store) plus the same per-batch marker
-# idempotency contract as the BM25/ANN sinks.
-
-
-def _sketch_stream_sink(store: str, bdf: DataFrame, bid: int) -> None:
-    """foreachBatch sink for the sketch store, exactly-once on
-    redelivery by the same construction as the BM25 sink (ADVICE r14
-    #1): the batch id rides the version's PUBLISH marker, so the
-    authoritative skip-check is "does any published version already
-    carry this bid" — one metadata read, no window between apply and
-    record.  The ``_batches/bid=N`` marker is only a fast path."""
-    from .retrieval import (
-        _fs_of,
-        _published_bids,
-        _published_versions,
-        _store_dir_exists,
-    )
-
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return  # redelivered, already fully applied
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            _init_sketch_store(bdf, store, bid=bid)
-        else:
-            upsert_sketch_rollup_store(bdf, store, bid=bid)
-    fs, hp = _fs_of(sess, marker)
-    fs.mkdirs(hp)
-
-
-def _run_sketch_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the fact feed, run the availableNow append stream into
-    ``root/store``, and block until it drains (extracted so the
-    composition unit can inspect the store the registry query
-    deletes)."""
-    from .retrieval import N_FEED_FILES
-
-    store = f"{root}/store"
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    ev.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _sketch_stream_sink(store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError("sketch upsert stream did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
+# needed.  The foreachBatch sink is the shared vstore.stream_sink
+# driving the certified append (upsert_sketch_rollup_store).
 
 
 def sketch_stream_upsert_store(
@@ -1789,18 +1675,18 @@ def sketch_stream_upsert_store(
     )
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_stream_")
     try:
-        _run_sketch_upsert_stream(spark, sf_dir, tmp)
+        run_upsert_stream(
+            spark, ev, tmp, _init_sketch_store, upsert_sketch_rollup_store
+        )
         store = f"{tmp}/store"
         # distinct pinned days straight from the latest manifest — a
         # driver-side metadata read (entries are (seg, day) pairs;
         # partial-day cells from different batches pin the same day)
-        from .retrieval import _latest_version, _manifest_entries
-
         n_days = len(
             {
                 d
-                for _, d in _manifest_entries(
-                    spark, store, _latest_version(spark, store)
+                for _, d in manifest_entries(
+                    spark, store, latest_version(spark, store)
                 )
             }
         )

@@ -72,6 +72,22 @@ from .similarity import (
     _norm,
     ivf_assignments,
 )
+from .vstore import (
+    RETAIN_VERSIONS,
+    VersionConflict,
+    commit_next,
+    fs_of,
+    latest_version,
+    manifest_entries,
+    new_att,
+    new_seg_id,
+    read_segments,
+    run_staged,
+    run_upsert_stream,
+    seg_buckets,
+    vacuum_versioned_store,
+    write_segment,
+)
 
 CAND_K = 40  # ADC candidates entering the exact rerank (4× the final k)
 
@@ -119,12 +135,10 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     (all build into fresh temp dirs)."""
     emb = _emb(spark, sf_dir)
     codes, cb = _pq_codes(spark, sf_dir)
-    from .retrieval import _fs_of, _new_att, _run_staged
-
-    stage = f"{path}/_build-{_new_att()}"
+    stage = f"{path}/_build-{new_att()}"
     # the three stored tables are independent files; write them as
     # concurrent jobs (optimization r15, guide §2.6)
-    _run_staged(
+    run_staged(
         lambda: _centroids(emb)
         .write.mode("overwrite")
         .parquet(f"{stage}/centroids"),
@@ -143,17 +157,17 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
             .parquet(f"{stage}/codes")
         ),
     )
-    fs, _ = _fs_of(spark, path)
+    fs, _ = fs_of(spark, path)
     for table in ("centroids", "codebook", "codes"):
-        _, dst = _fs_of(spark, f"{path}/{table}")
+        _, dst = fs_of(spark, f"{path}/{table}")
         if fs.exists(dst):
             fs.delete(dst, True)
-        _, src = _fs_of(spark, f"{stage}/{table}")
+        _, src = fs_of(spark, f"{stage}/{table}")
         if not fs.rename(src, dst):
             raise IOError(f"rename {src} -> {dst} failed")
     # the stage goes only after EVERY rename succeeded: after a failed
     # rename its not-yet-renamed tables are the only good copy
-    _, sp = _fs_of(spark, stage)
+    _, sp = fs_of(spark, stage)
     if fs.exists(sp):
         fs.delete(sp, True)
     # the PQ training artifacts are the session-lifetime memoized model
@@ -506,7 +520,7 @@ def _encode_codes(vecs: DataFrame, cb: DataFrame, centroids: DataFrame) -> DataF
 # pinned at version v is fully isolated from concurrent mutations
 # (previously delete/compact rewrote cell partitions in place via
 # dynamic partition overwrite and a mid-delete reader saw mixed
-# cells).  The machinery is retrieval.py's (segments, attempt-staged
+# cells).  The machinery is vstore.py's (segments, attempt-staged
 # manifests, conditional publish, vacuum GC) with the partition axis
 # ``cell`` instead of the term bucket.
 
@@ -520,11 +534,9 @@ def _ann_write_codes_segment(
     """Write one immutable code segment and return (seg, cells) — the
     cells read back from the stored files (the manifest pins what is
     on disk)."""
-    from .retrieval import _new_seg_id, _seg_buckets, _write_segment
-
     root = f"{path}/{_ANN_CODES_ROOT}"
-    seg = _new_seg_id()
-    _write_segment(
+    seg = new_seg_id()
+    write_segment(
         codes_df.select(
             "vec_id",
             F.col("m").cast("int").alias("m"),
@@ -535,7 +547,7 @@ def _ann_write_codes_segment(
         seg,
         pcol="cell",
     )
-    return seg, _seg_buckets(spark, root, seg, pcol="cell")
+    return seg, seg_buckets(spark, root, seg, pcol="cell")
 
 
 def _ann_pinned_codes(
@@ -545,14 +557,12 @@ def _ann_pinned_codes(
     manifest's (segment, cell) directories — cell stays a partition
     column, so the probe's ``cell IN (...)`` filter still prunes
     directories before any byte is read."""
-    from .retrieval import _latest_version, _manifest_entries, _read_segments
-
     if v is None:
-        v = _latest_version(spark, path)
-    return _read_segments(
+        v = latest_version(spark, path)
+    return read_segments(
         spark,
         f"{path}/{_ANN_CODES_ROOT}",
-        _manifest_entries(spark, path, v),
+        manifest_entries(spark, path, v),
         _ANN_CODES_SCHEMA,
         pcol="cell",
     )
@@ -594,11 +604,9 @@ def _model_identity(spark: SparkSession, path: str) -> str:
     the identity of the model it replaced.  (The v=1 publish marker
     would not do: vacuum deletes it once v=1 leaves the retention
     window.)  Pure metadata — one listing per table, no Spark job."""
-    from .retrieval import _fs_of
-
     names = []
     for table in ("centroids", "codebook"):
-        fs, hp = _fs_of(spark, f"{path}/{table}")
+        fs, hp = fs_of(spark, f"{path}/{table}")
         names += [
             f"{table}/{st.getPath().getName()}" for st in fs.listStatus(hp)
         ]
@@ -661,8 +669,10 @@ def _init_ann_versioned(
 ) -> None:
     """First write of the manifest-pinned store: frozen model tables
     (unversioned — the model is a build-time artifact mutations never
-    touch), one code segment over ``vecs``, and the published v=1
-    manifest pinning exactly that segment's cells.
+    touch), one code segment over ``vecs``, and the first published
+    manifest pinning exactly that segment's cells.  A store that
+    already has a published version raises :class:`VersionConflict`
+    before its model tables are touched.
 
     Optimization (r15, guide §2.6): the three writes (centroids,
     codebook, code segment) are physically independent files gated by
@@ -670,31 +680,26 @@ def _init_ann_versioned(
     IN-MEMORY model frames, not the parquet copies — so they run as
     concurrent jobs instead of leaving the cluster idle through each
     write's tail."""
-    from .retrieval import (
-        _new_att,
-        _publish_version,
-        _run_staged,
-        _write_manifest,
-    )
-
     cents = _centroids(_emb(spark, sf_dir))
     cb = _reservoir_codebook(spark, sf_dir)
-    seg_cells: dict = {}
 
-    def _stage_codes() -> None:
-        seg_cells["sc"] = _ann_write_codes_segment(
-            spark, _encode_codes(vecs, cb, cents), path
+    def stage(base: int, v: int, att: str):
+        if base:
+            raise VersionConflict(f"{path} already published v={base}")
+        seg_cells: list = []
+        run_staged(
+            lambda: cents.write.mode("overwrite").parquet(f"{path}/centroids"),
+            lambda: cb.write.mode("overwrite").parquet(f"{path}/codebook"),
+            lambda: seg_cells.append(
+                _ann_write_codes_segment(
+                    spark, _encode_codes(vecs, cb, cents), path
+                )
+            ),
         )
+        seg, cells = seg_cells[0]
+        return [(seg, c) for c in cells], None
 
-    _run_staged(
-        lambda: cents.write.mode("overwrite").parquet(f"{path}/centroids"),
-        lambda: cb.write.mode("overwrite").parquet(f"{path}/codebook"),
-        _stage_codes,
-    )
-    seg, cells = seg_cells["sc"]
-    att = _new_att()
-    _write_manifest(spark, path, 1, [(seg, c) for c in cells], att)
-    _publish_version(spark, path, 1, att, bid)
+    commit_next(spark, path, stage, bid)
 
 
 def build_index_frozen(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -724,34 +729,19 @@ def upsert_index(
     metadata, never to the corpus.  On :class:`VersionConflict` the
     manifest merge retries against the new latest (the batch segment
     is version-independent and written once)."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
     centroids, cb = _frozen_model(spark, path)
     seg, cells = _ann_write_codes_segment(
         spark, _encode_codes(batch, cb, centroids), path
     )
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v) + [
-            (seg, c) for c in cells
-        ]
-        _write_manifest(spark, path, v + 1, entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    commit_next(
+        spark,
+        path,
+        lambda v, nxt, att: (
+            manifest_entries(spark, path, v) + [(seg, c) for c in cells],
+            None,
+        ),
+        bid,
+    )
 
 
 def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,51 +796,30 @@ def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
     becomes unreferenced for vacuum's segment GC.  At 100 TB this runs
     per-cell-batch on a schedule, exactly the job the generic
     ``compaction_plan`` operator budgets."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _new_seg_id,
-        _publish_version,
-        _read_segments,
-        _seg_buckets,
-        _write_manifest,
-        _write_segment,
-    )
-
     cells = sorted(int(c) for c in cells)
     if not cells:
         return
     root = f"{path}/{_ANN_CODES_ROOT}"
     hit = set(cells)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        entries = _manifest_entries(spark, path, v)
+
+    def stage(v: int, nxt: int, att: str):
+        entries = manifest_entries(spark, path, v)
         affected = [e for e in entries if e[1] in hit]
         if not affected:
-            return  # nothing pinned in those cells — no new snapshot
-        rows = _read_segments(
+            return None, None  # nothing pinned in those cells
+        rows = read_segments(
             spark, root, affected, _ANN_CODES_SCHEMA, pcol="cell"
         )
-        seg = _new_seg_id()
-        att = _new_att()
-        _write_segment(
+        seg = new_seg_id()
+        write_segment(
             rows.repartition(len(cells), "cell"), root, seg, pcol="cell"
         )
-        survivors = _seg_buckets(spark, root, seg, pcol="cell")
-        new_entries = [e for e in entries if e[1] not in hit] + [
+        survivors = seg_buckets(spark, root, seg, pcol="cell")
+        return [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        ], None
+
+    commit_next(spark, path, stage)
 
 
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -952,24 +921,9 @@ def delete_from_index(
     ≤ N_CELLS — the model-boundary collect class).  Merge cost is
     proportional to the affected cells' code rows + fixed metadata,
     never to the corpus."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _new_seg_id,
-        _publish_version,
-        _read_segments,
-        _seg_buckets,
-        _write_manifest,
-        _write_segment,
-    )
-
     root = f"{path}/{_ANN_CODES_ROOT}"
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
+
+    def stage(v: int, nxt: int, att: str):
         codes = _ann_pinned_codes(spark, path, v)
         affected = sorted(
             r["cell"]
@@ -979,32 +933,26 @@ def delete_from_index(
             .collect()
         )
         if not affected:
-            return []
+            return None, []
         hit = set(affected)
-        entries = _manifest_entries(spark, path, v)
-        kept = _read_segments(
+        entries = manifest_entries(spark, path, v)
+        kept = read_segments(
             spark,
             root,
             [e for e in entries if e[1] in hit],
             _ANN_CODES_SCHEMA,
             pcol="cell",
         ).join(delete_ids, "vec_id", "left_anti")
-        seg = _new_seg_id()
-        att = _new_att()
-        _write_segment(
+        seg = new_seg_id()
+        write_segment(
             kept.repartition(len(affected), "cell"), root, seg, pcol="cell"
         )
-        survivors = _seg_buckets(spark, root, seg, pcol="cell")
-        new_entries = [e for e in entries if e[1] not in hit] + [
+        survivors = seg_buckets(spark, root, seg, pcol="cell")
+        return [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return affected
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        ], affected
+
+    return commit_next(spark, path, stage)
 
 
 def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,73 +1003,19 @@ def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (including the first) only appends codes.
 
 
-def _ann_stream_sink(
-    sf_dir: str, store: str, bdf: DataFrame, bid: int
-) -> None:
-    """foreachBatch body for the ANN ingest stream: the first applied
-    batch initializes the manifest-pinned store (frozen model + v=1
-    segment), every later batch runs the certified versioned upsert.
-    Redelivery is exactly-once end to end (the
-    retrieval._bm25_stream_sink contract, ADVICE r14 #1): the batch id
-    rides in the publish marker, so the authoritative skip-check —
-    "does any PUBLISHED version carry this bid" — is atomic with the
-    version commit; the ``_batches/bid=N`` marker is only a fast
-    path.  A crash midway through a batch (before its publish) leaves
-    unpinned segment + staged-dir debris for vacuum and the retry
-    re-applies against the same latest version."""
-    from .retrieval import _fs_of, _published_bids, _published_versions, _store_dir_exists
-
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            _init_ann_versioned(sess, sf_dir, store, bdf, bid=bid)
-        else:
-            upsert_index(sess, sf_dir, store, bdf, bid=bid)
-    fs, hp = _fs_of(sess, marker)
-    fs.mkdirs(hp)
-
-
-def _run_ann_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the corpus feed, run the availableNow ingest stream into
-    ``root/store``, and block until it drains (extracted so the
-    composition unit can inspect the store the registry query
-    deletes)."""
-    from .retrieval import N_FEED_FILES
-
-    store = f"{root}/store"
-    emb = _emb(spark, sf_dir)
-    emb.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _ann_stream_sink(sf_dir, store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+def _ann_stream_callbacks(sf_dir: str):
+    """(init, upsert) of the ANN store for :func:`vstore.stream_sink`:
+    the first applied batch initializes the manifest-pinned store
+    (frozen model + first segment), every later batch runs the
+    certified versioned upsert."""
+    return (
+        lambda bdf, store, bid: _init_ann_versioned(
+            bdf.sparkSession, sf_dir, store, bdf, bid=bid
+        ),
+        lambda bdf, store, bid: upsert_index(
+            bdf.sparkSession, sf_dir, store, bdf, bid=bid
+        ),
     )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError("ann upsert stream did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
 
 
 def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,7 +1036,9 @@ def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = tempfile.mkdtemp(prefix="sgraft_ann_stream_")
     try:
-        _run_ann_upsert_stream(spark, sf_dir, tmp)
+        run_upsert_stream(
+            spark, _emb(spark, sf_dir), tmp, *_ann_stream_callbacks(sf_dir)
+        )
         store = f"{tmp}/store"
         centroids, codebook, codes = read_index_versioned(spark, store)
         nv = codes.select("vec_id").distinct().agg(
@@ -1159,7 +1055,7 @@ def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def vacuum_ann_store(
-    spark: SparkSession, path: str, keep_last: int = 1
+    spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
 ) -> int:
     """Retention vacuum for the manifest-pinned ANN store: keep the
     newest ``keep_last`` published versions' manifests, sweep dangling
@@ -1169,9 +1065,7 @@ def vacuum_ann_store(
     contract and single-writer assumption as
     retrieval.vacuum_bm25_store; this replaces the r13 junk-file
     sweep, whose in-place layout no longer exists)."""
-    from .retrieval import _vacuum_versioned_store
-
-    return _vacuum_versioned_store(
+    return vacuum_versioned_store(
         spark, path, ("manifests",), (_ANN_CODES_ROOT,), keep_last
     )
 
@@ -1490,8 +1384,6 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
         compact_index_cells(spark, tmp, batch_cells)
-        from .retrieval import _latest_version
-
         # retention vacuum (result unused) runs concurrently with the
         # serve of the latest version (optimization r16, guide §2.6):
         # vacuum retains exactly the version served — manifest, model
@@ -1499,7 +1391,7 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # undisturbed by construction; joined before teardown.
         from concurrent.futures import ThreadPoolExecutor
 
-        v = _latest_version(spark, tmp)
+        v = latest_version(spark, tmp)
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _vac = _pool.submit(vacuum_ann_store, spark, tmp, keep_last=1)
             tele = dels.agg(

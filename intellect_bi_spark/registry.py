@@ -307,11 +307,11 @@ for _mod in _MODULES:
 # locked identical by tests/test_fmp4.py::
 # test_mb4_sampled_decode_unchanged_by_roll_extraction, and
 # video_features_mb4's r12 driver row remains valid).  The r13
-# Hadoop-FS version-discovery conversion (retrieval._fs_of replacing
+# Hadoop-FS version-discovery conversion (vstore.fs_of replacing
 # os.listdir) and the stream-sink idempotency markers change no
 # certified query's generated plan or output (ADVICE r12 items; the
 # marker writes are new files outside every read path).  Likewise the
-# r13 manifest commit (retrieval._publish_version): version resolution
+# r13 manifest commit (vstore.publish_version): version resolution
 # moved from data-dir listing to published markers — bm25_index_upsert's
 # generated plan and values are unchanged (same parquet paths read; the
 # markers are empty dirs outside every scan), re-verified by this

@@ -92,7 +92,7 @@ def get_spark(app_name: str = "intellect_bi_spark") -> SparkSession:
         )
         # FAIR scheduler (optimization r16, guide §2.6 full form): the
         # store-mutation legs submit 2-3 independent staged writes as
-        # concurrent jobs (retrieval._run_staged), each tagged with its
+        # concurrent jobs (vstore.run_staged), each tagged with its
         # own scheduler pool.  Under the default FIFO mode a big segment
         # write can head-of-line block the small lexicon/stats writes on
         # a busy cluster; FAIR gives each staged job an equal share.

@@ -46,6 +46,7 @@ from intellect_bi_spark.operators import forecast as fc
 from intellect_bi_spark.operators import retrieval as rt
 from intellect_bi_spark.operators import sketches as sk
 from intellect_bi_spark.operators import vectorstore as vs
+from intellect_bi_spark.operators import vstore
 from intellect_bi_spark.operators.similarity import _emb
 from intellect_bi_spark.plans import intent
 
@@ -139,7 +140,7 @@ def test_sketch_serve_lists_many_dirs_one_task_per_core(spark, sf_dir):
     try:
         sk._init_sketch_store(ev.filter(F.col("user_id") % 2 == 0), tmp)
         sk.upsert_sketch_rollup_store(ev.filter(F.col("user_id") % 2 == 1), tmp)
-        pins = rt._manifest_entries(spark, tmp, rt._latest_version(spark, tmp))
+        pins = vstore.manifest_entries(spark, tmp, vstore.latest_version(spark, tmp))
         assert len(pins) > 32, len(pins)
         jobs = _job_ids(
             spark, lambda: sk.serve_sketch_rollup_from_store(spark, tmp).collect()

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from intellect_bi_spark.functions.memo import SessionMemo
 from intellect_bi_spark.operators import retrieval as rt
 from intellect_bi_spark.operators import vectorstore as vs
+from intellect_bi_spark.operators import vstore
 from intellect_bi_spark.operators.similarity import _emb
 
 
@@ -31,14 +32,14 @@ def _rows(df) -> list[tuple]:
 
 def _unmemoized_bm25(spark, path, v) -> list[tuple]:
     """The fixed query over version ``v``'s tables read afresh."""
-    postings = rt._read_segments(
+    postings = vstore.read_segments(
         spark,
         f"{path}/postings",
-        rt._manifest_entries(spark, path, v),
+        vstore.manifest_entries(spark, path, v),
         rt._BM25_POSTING_SCHEMA,
     )
-    lexicon = spark.read.parquet(rt._table_dir(spark, path, "lexicon", v))
-    stats = spark.read.parquet(rt._table_dir(spark, path, "stats", v)).select(
+    lexicon = spark.read.parquet(vstore.table_dir(spark, path, "lexicon", v))
+    stats = spark.read.parquet(vstore.table_dir(spark, path, "stats", v)).select(
         (
             F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
         ).alias("avgdl"),
@@ -66,7 +67,7 @@ def chain(spark, sf_dir):
     served: dict = {}
 
     def record() -> None:
-        served[rt._latest_version(spark, tmp)] = _rows(
+        served[vstore.latest_version(spark, tmp)] = _rows(
             rt.serve_bm25_v2(spark, tmp)
         )
 

@@ -1,4 +1,4 @@
-"""Focused units for the r15 optimization internals: `_run_staged`
+"""Focused units for the r15 optimization internals: `run_staged`
 (concurrent staged-write execution inside a mutation leg — guide §2.6)
 must run every thunk, propagate failures, and degrade to a plain call
 for a single thunk.  The store-content consequences of using it (byte-
@@ -10,7 +10,7 @@ import threading
 
 import pytest
 
-from intellect_bi_spark.operators.retrieval import _run_staged
+from intellect_bi_spark.operators.vstore import run_staged
 
 
 def test_run_staged_runs_every_thunk():
@@ -24,7 +24,7 @@ def test_run_staged_runs_every_thunk():
 
         return t
 
-    _run_staged(*[mk(i) for i in range(4)])
+    run_staged(*[mk(i) for i in range(4)])
     assert sorted(done) == [0, 1, 2, 3]
 
 
@@ -38,7 +38,7 @@ def test_run_staged_propagates_the_failure():
         raise ValueError("staged write failed")
 
     with pytest.raises(ValueError, match="staged write failed"):
-        _run_staged(ok, boom)
+        run_staged(ok, boom)
     # the publish-gated contract: the surviving thunk may or may not
     # have completed (both are just unpublished staged debris), but the
     # failure must reach the caller so no publish happens
@@ -47,7 +47,7 @@ def test_run_staged_propagates_the_failure():
 
 def test_run_staged_single_thunk_runs_inline():
     tid = []
-    _run_staged(lambda: tid.append(threading.get_ident()))
+    run_staged(lambda: tid.append(threading.get_ident()))
     assert tid == [threading.get_ident()]
 
 
@@ -73,8 +73,8 @@ def test_run_staged_pools_derive_from_the_callers_pool(spark):
 
                 return t
 
-            both_in.wait()  # the two callers' _run_staged overlap
-            _run_staged(thunk(0), thunk(1))
+            both_in.wait()  # the two callers' run_staged overlap
+            run_staged(thunk(0), thunk(1))
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
@@ -93,7 +93,7 @@ def test_run_staged_pools_derive_from_the_callers_pool(spark):
     }
 
     got = []
-    _run_staged(
+    run_staged(
         lambda: got.append(sc.getLocalProperty("spark.scheduler.pool")),
         lambda: got.append(sc.getLocalProperty("spark.scheduler.pool")),
     )

@@ -12,9 +12,11 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from intellect_bi_spark.operators import vectorstore as vs
+from intellect_bi_spark.operators import vstore
 from intellect_bi_spark.operators.clustering import _pq_codes
 from intellect_bi_spark.operators.similarity import _emb, ivf_assignments
 
@@ -167,9 +169,7 @@ def test_build_index_keeps_stage_when_a_rename_fails(spark, sf_dir, monkeypatch)
 
     import pytest
 
-    from intellect_bi_spark.operators import retrieval as rt
-
-    real_fs_of = rt._fs_of
+    real_fs_of = vstore.fs_of
 
     class _FailingRename:
         def __init__(self, fs):
@@ -187,7 +187,7 @@ def test_build_index_keeps_stage_when_a_rename_fails(spark, sf_dir, monkeypatch)
         fs, hp = real_fs_of(spark, path)
         return _FailingRename(fs), hp
 
-    monkeypatch.setattr(rt, "_fs_of", _fs_of)
+    monkeypatch.setattr(vs, "fs_of", _fs_of)
     tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
     try:
         with pytest.raises(IOError):
@@ -284,9 +284,9 @@ def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
     """The lexical twin of the IVF-PQ store contract: serving from the
     persisted postings/lexicon/stats must reproduce the direct BM25
     ranking bit for bit (same quantized scores, same order).  Runs
-    through serve_bm25_from_store — the SAME composition bench.py's
-    bm25_index_serve_only metric times — so the verified path IS the
-    timed path (VERDICT r10 #4)."""
+    v1 of the versioned store through serve_bm25_v2 — the SAME
+    composition bench.py's bm25_index_serve_only metric times — so the
+    verified path IS the timed path (VERDICT r10 #4)."""
     from intellect_bi_spark.operators import retrieval as rt
 
     want = [
@@ -295,10 +295,10 @@ def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
     ]
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25test_")
     try:
-        rt.build_bm25_index(spark, sf_dir, tmp)
+        rt._init_bm25_store(rt._base_docs(spark, sf_dir), tmp)
         got = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
-            for r in rt.serve_bm25_from_store(spark, tmp).collect()
+            for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -313,10 +313,9 @@ def test_bm25_serve_scan_pushes_term_filter(spark, sf_dir):
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25test_")
     try:
-        rt.build_bm25_index(spark, sf_dir, tmp)
-        postings, lex, stats = rt.read_bm25_index(spark, tmp)
+        rt._init_bm25_store(rt._base_docs(spark, sf_dir), tmp)
         plan = (
-            rt.topk_from_bm25_index(postings, lex, stats)
+            rt.serve_bm25_v2(spark, tmp)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -393,15 +392,13 @@ def test_upsert_rewrites_only_affected_cells(spark, sf_dir):
     segment whose cells are the batch's assigned cells, and the v=2
     manifest extends v=1's pin list by exactly that segment's
     entries."""
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(vs._upsert_batch_pred())
     tmp = tempfile.mkdtemp(prefix="sgraft_upsertfiles_")
     try:
         vs.build_index_frozen(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/codes")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         centroids = spark.read.parquet(f"{tmp}/centroids")
         batch_cells = {
             int(r["cell"])
@@ -417,7 +414,7 @@ def test_upsert_rewrites_only_affected_cells(spark, sf_dir):
         new_segs = {path.split("/", 1)[0] for path in new_files}
         assert len(new_segs) == 1, f"batch spread over {new_segs}"
         assert new_segs.isdisjoint({f"seg={seg}" for seg, _ in m1})
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         assert set(m1) <= set(m2), "v=2 manifest dropped a v=1 pin"
         added = set(m2) - set(m1)
         assert {c for _, c in added} == batch_cells
@@ -448,12 +445,12 @@ def test_bm25_upsert_equals_rebuild_and_direct(spark, sf_dir):
         ]
         assert got == want and len(got) == rt.TOP_K
         # merged lexicon == full-corpus df relation, exactly
-        v = rt._latest_version(spark, tmp)
+        v = vstore.latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the upsert wrote v=2
         merged_lex = sorted(
             (r["term"], r["df"])
             for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", v)
+                vstore.table_dir(spark, tmp, "lexicon", v)
             ).collect()
         )
         toks = rt._toks_of(rt._base_docs(spark, sf_dir))
@@ -466,7 +463,7 @@ def test_bm25_upsert_equals_rebuild_and_direct(spark, sf_dir):
         )
         assert merged_lex == full_lex
         stats = spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", v)
+            vstore.table_dir(spark, tmp, "stats", v)
         ).collect()[0]
         full = rt._stats2_of(toks).collect()[0]
         assert (stats["n_docs"], stats["sum_len"]) == (
@@ -507,7 +504,7 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/postings")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         batch = rt._base_docs(spark, sf_dir).filter(rt._doc_batch_pred())
         batch_buckets = {
             int(r["tb"])
@@ -526,17 +523,17 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
         new_segs = {p.split("/", 1)[0] for p in new_files}
         assert len(new_segs) == 1, f"batch spread over {new_segs}"
         assert new_segs.isdisjoint({f"seg={s}" for s, _ in m1})
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         assert set(m1) <= set(m2), "v=2 manifest dropped a v=1 pin"
         added = set(m2) - set(m1)
         assert {t for _, t in added} == batch_buckets
         assert {f"seg={s}" for s, _ in added} == new_segs
         # v=1 lexicon/stats remain readable (snapshot isolation)
         assert spark.read.parquet(
-            rt._table_dir(spark, tmp, "lexicon", 1)
+            vstore.table_dir(spark, tmp, "lexicon", 1)
         ).count() > 0
         assert spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", 1)
+            vstore.table_dir(spark, tmp, "stats", 1)
         ).count() == 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -579,21 +576,24 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
     ]
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25streamtest_")
     try:
-        rt._run_bm25_upsert_stream(spark, sf_dir, tmp)
+        vstore.run_upsert_stream(
+            spark, rt._base_docs(spark, sf_dir), tmp, rt._init_bm25_store,
+            rt._bm25_stream_upsert,
+        )
         store = f"{tmp}/store"
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+        assert vstore.latest_version(spark, store) == vstore.N_FEED_FILES
         # every intermediate version survives (snapshot isolation chain)
-        for v in range(1, rt.N_FEED_FILES + 1):
-            assert os.path.isdir(rt._table_dir(spark, store, "lexicon", v))
+        for v in range(1, vstore.N_FEED_FILES + 1):
+            assert os.path.isdir(vstore.table_dir(spark, store, "lexicon", v))
         got = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_v2(spark, store).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
         # final stats == full corpus accounting
-        v = rt._latest_version(spark, store)
+        v = vstore.latest_version(spark, store)
         stats = spark.read.parquet(
-            rt._table_dir(spark, store, "stats", v)
+            vstore.table_dir(spark, store, "stats", v)
         ).collect()[0]
         n_docs = rt._base_docs(spark, sf_dir).count()
         assert stats["n_docs"] == n_docs
@@ -601,13 +601,15 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         # a marker, and re-running the sink with an already-applied
         # batch id must NOT double-append — version chain and stats are
         # unchanged after the redelivery
-        for bid in range(rt.N_FEED_FILES):
+        for bid in range(vstore.N_FEED_FILES):
             assert os.path.isdir(f"{store}/_batches/bid={bid}")
         redelivered = rt._base_docs(spark, sf_dir).limit(5)
-        rt._bm25_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        vstore.stream_sink(
+            store, redelivered, 0, rt._init_bm25_store, rt._bm25_stream_upsert
+        )
+        assert vstore.latest_version(spark, store) == v
         stats2 = spark.read.parquet(
-            rt._table_dir(spark, store, "stats", v)
+            vstore.table_dir(spark, store, "stats", v)
         ).collect()[0]
         assert stats2["n_docs"] == n_docs
         # the AUTHORITATIVE exactly-once check (ADVICE r14 #1): even
@@ -615,9 +617,11 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         # publish-to-marker window), redelivery is skipped because a
         # published version already carries the bid
         shutil.rmtree(f"{store}/_batches/bid=0")
-        assert 0 in rt._published_bids(spark, store)
-        rt._bm25_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        assert 0 in vstore.published_bids(spark, store)
+        vstore.stream_sink(
+            store, redelivered, 0, rt._init_bm25_store, rt._bm25_stream_upsert
+        )
+        assert vstore.latest_version(spark, store) == v
         got2 = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_v2(spark, store).collect()
@@ -637,8 +641,6 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
     served ranking unchanged."""
     from collections import Counter
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(vs._upsert_batch_pred())
     tmp = tempfile.mkdtemp(prefix="sgraft_compact_")
@@ -654,7 +656,7 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
             .collect()
         }
         before = _tree_files(f"{tmp}/codes")
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         pins_per_cell = Counter(c for _, c in m2)
         assert any(pins_per_cell[c] > 1 for c in affected)  # real fragmentation
         codes_before = sorted(
@@ -668,11 +670,11 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
             ).collect()
         ]
         vs.compact_index_cells(spark, tmp, sorted(affected))
-        assert rt._latest_version(spark, tmp) == 3  # a snapshot, not a rewrite
+        assert vstore.latest_version(spark, tmp) == 3  # a snapshot, not a rewrite
         after = _tree_files(f"{tmp}/codes")
         for path, sz in before.items():
             assert after.get(path) == sz, f"{path}: old file changed"
-        m3 = rt._manifest_entries(spark, tmp, 3)
+        m3 = vstore.manifest_entries(spark, tmp, 3)
         assert [e for e in m2 if e[1] not in affected] == [
             e for e in m3 if e[1] not in affected
         ], "unaffected pins changed"
@@ -719,11 +721,9 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
     assert del_ids  # the fixture erase set is non-empty
     tmp = tempfile.mkdtemp(prefix="sgraft_anndel_")
     try:
-        from intellect_bi_spark.operators import retrieval as rt
-
         vs.build_index_frozen_full(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/codes")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         codes_before = sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
             for r in vs.read_index_versioned(spark, tmp)[2].collect()
@@ -743,7 +743,7 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
             assert after.get(path) == sz, f"{path}: pre-existing file changed"
         # untouched cells keep their exact v=1 pins; affected cells are
         # re-pinned to one survivor segment
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in hit] == [
             e for e in m2 if e[1] not in hit
         ], "untouched cells re-pinned"
@@ -754,7 +754,7 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
         # pinned at v=1 sees the COMPLETE pre-delete store — identical
         # pins, byte-identical files, identical served ranking — even
         # after the delete fully committed v=2
-        assert rt._manifest_entries(spark, tmp, 1) == m1
+        assert vstore.manifest_entries(spark, tmp, 1) == m1
         for seg, c in m1:
             rel_prefix = f"seg={seg}/cell={c}"
             pinned = {path for path in before if path.startswith(rel_prefix)}
@@ -810,19 +810,19 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
     double-appending (same idempotency contract as the BM25 sink)."""
     import os
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_annstreamtest_")
     try:
-        vs._run_ann_upsert_stream(spark, sf_dir, tmp)
+        vstore.run_upsert_stream(
+            spark, emb, tmp, *vs._ann_stream_callbacks(sf_dir)
+        )
         store = f"{tmp}/store"
-        for bid in range(rt.N_FEED_FILES):
+        for bid in range(vstore.N_FEED_FILES):
             assert os.path.isdir(f"{store}/_batches/bid={bid}")
         # one published version per applied batch, each carrying its bid
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
-        assert rt._published_bids(spark, store) == set(
-            range(rt.N_FEED_FILES)
+        assert vstore.latest_version(spark, store) == vstore.N_FEED_FILES
+        assert vstore.published_bids(spark, store) == set(
+            range(vstore.N_FEED_FILES)
         )
         codes = vs.read_index_versioned(spark, store)[2]
         n_corpus = emb.count()
@@ -845,7 +845,9 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
         ]
         assert serve == want and len(serve) == vs.TOP_K
         # redelivery of an applied batch id must change nothing
-        vs._ann_stream_sink(sf_dir, store, emb.limit(5), 0)
+        vstore.stream_sink(
+            store, emb.limit(5), 0, *vs._ann_stream_callbacks(sf_dir)
+        )
         codes2 = vs.read_index_versioned(spark, store)[2]
         assert codes2.count() == n_rows
         assert codes2.select("vec_id").distinct().count() == n_corpus
@@ -853,8 +855,10 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
         # with the fast-path marker removed — the crashed
         # publish-to-marker window — the published bid skips the batch
         shutil.rmtree(f"{store}/_batches/bid=0")
-        vs._ann_stream_sink(sf_dir, store, emb.limit(5), 0)
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+        vstore.stream_sink(
+            store, emb.limit(5), 0, *vs._ann_stream_callbacks(sf_dir)
+        )
+        assert vstore.latest_version(spark, store) == vstore.N_FEED_FILES
         assert vs.read_index_versioned(spark, store)[2].count() == n_rows
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -870,18 +874,16 @@ def test_vacuum_ann_store_retention_and_segment_gc(spark, sf_dir):
     Idempotent: a second vacuum removes nothing."""
     import os
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_annvac_")
     try:
         vs.build_index_frozen(spark, sf_dir, tmp)
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         seg_a = {seg for seg, _ in m1}
         assert len(seg_a) == 1
         all_cells = sorted({c for _, c in m1})
         vs.compact_index_cells(spark, tmp, all_cells)
-        assert rt._latest_version(spark, tmp) == 2
+        assert vstore.latest_version(spark, tmp) == 2
         serve_before = [
             tuple(r)
             for r in vs.topk_from_index(
@@ -891,21 +893,21 @@ def test_vacuum_ann_store_retention_and_segment_gc(spark, sf_dir):
         # plant a losing attempt's staged manifest file (the race
         # debris vacuum owns; manifests are driver-written JSON files)
         shutil.copy(
-            rt._table_dir(spark, tmp, "manifests", 2),
-            rt._stage_path(tmp, "manifests", 2, "deadcafe"),
+            vstore.table_dir(spark, tmp, "manifests", 2),
+            vstore.stage_path(tmp, "manifests", 2, "deadcafe"),
         )
         live_manifest = open(
-            rt._table_dir(spark, tmp, "manifests", 2), "rb"
+            vstore.table_dir(spark, tmp, "manifests", 2), "rb"
         ).read()
         removed = vs.vacuum_ann_store(spark, tmp, keep_last=1)
         # v=1 manifest + the planted attempt file + segment A
         assert removed == 3
-        assert rt._published_versions(spark, tmp) == [2]
-        assert not os.path.exists(rt._stage_path(tmp, "manifests", 2, "deadcafe"))
+        assert vstore.published_versions(spark, tmp) == [2]
+        assert not os.path.exists(vstore.stage_path(tmp, "manifests", 2, "deadcafe"))
         for seg in seg_a:
             assert not os.path.isdir(f"{tmp}/codes/seg={seg}")
         assert open(
-            rt._table_dir(spark, tmp, "manifests", 2), "rb"
+            vstore.table_dir(spark, tmp, "manifests", 2), "rb"
         ).read() == live_manifest
         serve_after = [
             tuple(r)
@@ -940,7 +942,7 @@ def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
         rt.upsert_bm25_index(spark, tmp, b1)
         rt.upsert_bm25_index(spark, tmp, b2)
         for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [1, 2, 3]
+            assert vstore.versions_in(spark, f"{tmp}/{table}") == [1, 2, 3]
         serve_before = [
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
@@ -951,7 +953,7 @@ def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
         postings_before = _tree_files(f"{tmp}/postings")
         assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 6
         for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [3]
+            assert vstore.versions_in(spark, f"{tmp}/{table}") == [3]
             assert _tree_files(f"{tmp}/{table}/v=3") == live_before[table]
         assert _tree_files(f"{tmp}/postings") == postings_before
         serve_after = [
@@ -985,13 +987,13 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
     try:
         rt._init_bm25_store(docs, tmp)
         before = _tree_files(f"{tmp}/postings")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         affected = set(rt.delete_from_bm25_index(spark, tmp, dels))
         assert affected
         after = _tree_files(f"{tmp}/postings")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in affected] == [
             e for e in m2 if e[1] not in affected
         ], "untouched buckets re-pinned"
@@ -1000,26 +1002,26 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
         assert len({s for s, _ in new_pins}) == 1  # one survivor segment
         # independent rebuild over the survivors only
         rt._init_bm25_store(kept, tmp2)
-        v = rt._latest_version(spark, tmp)
+        v = vstore.latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the delete wrote v=2
         got_lex = sorted(
             (r["term"], r["df"])
             for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", v)
+                vstore.table_dir(spark, tmp, "lexicon", v)
             ).collect()
         )
         want_lex = sorted(
             (r["term"], r["df"])
             for r in spark.read.parquet(
-                rt._table_dir(spark, tmp2, "lexicon", 1)
+                vstore.table_dir(spark, tmp2, "lexicon", 1)
             ).collect()
         )
         assert got_lex == want_lex
         got_stats = spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", v)
+            vstore.table_dir(spark, tmp, "stats", v)
         ).collect()[0]
         want_stats = spark.read.parquet(
-            rt._table_dir(spark, tmp2, "stats", 1)
+            vstore.table_dir(spark, tmp2, "stats", 1)
         ).collect()[0]
         assert (got_stats["n_docs"], got_stats["sum_len"]) == (
             want_stats["n_docs"],
@@ -1027,16 +1029,16 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
         )
         got_postings = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in vstore.read_segments(
                 spark, f"{tmp}/postings", m2, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
         want_postings = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in vstore.read_segments(
                 spark,
                 f"{tmp2}/postings",
-                rt._manifest_entries(spark, tmp2, 1),
+                vstore.manifest_entries(spark, tmp2, 1),
                 rt._BM25_POSTING_SCHEMA,
             ).collect()
         )
@@ -1070,13 +1072,13 @@ def test_bm25_mid_delete_reader_sees_full_pre_delete_store(spark, sf_dir):
         want_v1 = [
             tuple(r) for r in rt.serve_bm25_v2_at(spark, tmp, 1).collect()
         ]
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         before = _tree_files(f"{tmp}/postings")
         assert rt.delete_from_bm25_index(spark, tmp, dels)
-        assert rt._latest_version(spark, tmp) == 2
+        assert vstore.latest_version(spark, tmp) == 2
         # the v=1 reader's world is untouched: same pins, same bytes,
         # same answer
-        assert rt._manifest_entries(spark, tmp, 1) == m1
+        assert vstore.manifest_entries(spark, tmp, 1) == m1
         after = _tree_files(f"{tmp}/postings")
         for s, t in m1:
             rel_prefix = f"seg={s}/tb={t}"
@@ -1119,7 +1121,7 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
         for r in rt.bm25_topk_docs(spark, sf_dir).collect()
     ]
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25race_")
-    orig = rt._publish_version
+    orig = vstore.publish_version
     state = {"conflicts": 0, "fired": False, "winner_files": None}
     try:
         rt._init_bm25_store(base, tmp)
@@ -1129,35 +1131,35 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
                 state["fired"] = True
                 # writer B completes an ENTIRE upsert (stage + publish
                 # v=2) between A's staging and A's publish
-                rt._publish_version = orig
+                vstore.publish_version = orig
                 try:
                     rt.upsert_bm25_index(sess, store, b2)
                 finally:
-                    rt._publish_version = racy
+                    vstore.publish_version = racy
                 # snapshot the winner's published v=2 data bytes
                 state["winner_files"] = {
-                    t: _tree_files(rt._table_dir(sess, store, t, 2))
+                    t: _tree_files(vstore.table_dir(sess, store, t, 2))
                     for t in ("lexicon", "stats", "manifests")
                 }
             try:
                 return orig(sess, store, v, att, bid)
-            except rt.VersionConflict:
+            except vstore.VersionConflict:
                 state["conflicts"] += 1
                 raise
 
-        rt._publish_version = racy
+        vstore.publish_version = racy
         rt.upsert_bm25_index(spark, tmp, b1)  # writer A: loses v=2
     finally:
-        rt._publish_version = orig
+        vstore.publish_version = orig
     try:
         assert state["fired"] and state["conflicts"] == 1
-        assert rt._latest_version(spark, tmp) == 3
+        assert vstore.latest_version(spark, tmp) == 3
         # (b) the winner's v=2 data survived A's losing attempt
         # byte-identical — the ADVICE r14 #2 lost-update is unreachable
         for t, files in state["winner_files"].items():
-            assert _tree_files(rt._table_dir(spark, tmp, t, 2)) == files
+            assert _tree_files(vstore.table_dir(spark, tmp, t, 2)) == files
         # (c) the loser's staged v=2 dirs are present as debris ...
-        win2 = os.path.basename(rt._table_dir(spark, tmp, "lexicon", 2))
+        win2 = os.path.basename(vstore.table_dir(spark, tmp, "lexicon", 2))
         lex_dirs = set(os.listdir(f"{tmp}/lexicon"))
         loser_dirs = {
             d for d in lex_dirs if d.startswith("v=2-") and d != win2
@@ -1180,7 +1182,7 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
         got_lex = sorted(
             (r["term"], r["df"])
             for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", 3)
+                vstore.table_dir(spark, tmp, "lexicon", 3)
             ).collect()
         )
         assert got_lex == full_lex
@@ -1215,11 +1217,11 @@ def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25manifest_")
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
-        assert rt._published_versions(spark, tmp) == [1]
+        assert vstore.published_versions(spark, tmp) == [1]
         batch = rt._base_docs(spark, sf_dir).filter(rt._doc_batch_pred())
         rt.upsert_bm25_index(spark, tmp, batch)
-        assert rt._published_versions(spark, tmp) == [1, 2]
-        assert rt._latest_version(spark, tmp) == 2
+        assert vstore.published_versions(spark, tmp) == [1, 2]
+        assert vstore.latest_version(spark, tmp) == 2
         want = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         # simulate a writer that crashed AFTER staging v=3 data but
         # BEFORE the marker commit: copy the live version's parquet
@@ -1227,31 +1229,31 @@ def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
         # must be ignored)
         for table in ("lexicon", "stats"):
             shutil.copytree(
-                rt._table_dir(spark, tmp, table, 2),
-                rt._stage_path(tmp, table, 3, "deadcafe"),
+                vstore.table_dir(spark, tmp, table, 2),
+                vstore.stage_path(tmp, table, 3, "deadcafe"),
             )
         shutil.copy(  # manifests are files, not parquet dirs (r15)
-            rt._table_dir(spark, tmp, "manifests", 2),
-            rt._stage_path(tmp, "manifests", 3, "deadcafe"),
+            vstore.table_dir(spark, tmp, "manifests", 2),
+            vstore.stage_path(tmp, "manifests", 3, "deadcafe"),
         )
-        assert rt._versions_in(spark, f"{tmp}/lexicon") == [1, 2, 3]
-        assert rt._latest_version(spark, tmp) == 2  # dangling invisible
+        assert vstore.versions_in(spark, f"{tmp}/lexicon") == [1, 2, 3]
+        assert vstore.latest_version(spark, tmp) == 2  # dangling invisible
         got = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got == want  # serve unaffected by the crash debris
         # plus a marker whose writer died inside the create-to-close
         # window (empty body): it must gate nothing and vacuum must
         # sweep it as unresolvable
         open(f"{tmp}/_published/v=9", "w").close()
-        assert rt._latest_version(spark, tmp) == 2
+        assert vstore.latest_version(spark, tmp) == 2
         # vacuum removes v=1 (superseded) AND v=3 (dangling) from all
         # three versioned tables: 6 data dirs (every segment is pinned
         # by the surviving v=2 manifest, so the segment GC removes 0)
         assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 6
         for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [2]
-        assert rt._published_versions(spark, tmp) == [2]
+            assert vstore.versions_in(spark, f"{tmp}/{table}") == [2]
+        assert vstore.published_versions(spark, tmp) == [2]
         assert not os.path.exists(f"{tmp}/_published/v=9")
-        assert rt._versions_in(spark, f"{tmp}/lexicon") == [2]
+        assert vstore.versions_in(spark, f"{tmp}/lexicon") == [2]
         got2 = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got2 == want
     finally:
@@ -1357,14 +1359,14 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             .distinct()
             .collect()
         }
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         # fragmentation real: every affected bucket pinned in 2 segments
         for b in affected:
             assert len({s for s, t in m2 if t == b}) == 2
         before = _tree_files(f"{tmp}/postings")
         rows_before = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in vstore.read_segments(
                 spark, f"{tmp}/postings", m2, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
@@ -1372,11 +1374,11 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
         rt.compact_bm25_buckets(spark, tmp, sorted(affected))
-        assert rt._latest_version(spark, tmp) == 3  # compaction snapshots
+        assert vstore.latest_version(spark, tmp) == 3  # compaction snapshots
         after = _tree_files(f"{tmp}/postings")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m3 = rt._manifest_entries(spark, tmp, 3)
+        m3 = vstore.manifest_entries(spark, tmp, 3)
         assert [e for e in m2 if e[1] not in affected] == [
             e for e in m3 if e[1] not in affected
         ], "untouched buckets re-pinned"
@@ -1396,7 +1398,7 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             assert len(files) == 1, f"tb={b}: not coalesced to one file"
         rows_after = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in vstore.read_segments(
                 spark, f"{tmp}/postings", m3, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
@@ -1488,7 +1490,7 @@ def test_phrase_store_upsert_delete_copy_on_write(spark, sf_dir):
     try:
         rt._init_pos_store(base, tmp)
         rt.upsert_phrase_index(spark, tmp, batch)
-        assert rt._latest_version(spark, tmp) == 2
+        assert vstore.latest_version(spark, tmp) == 2
         got_ph = [tuple(r) for r in rt.serve_phrase_from_store(spark, tmp).collect()]
         got_nr = [tuple(r) for r in rt.serve_near_from_store(spark, tmp).collect()]
         assert got_ph == want_ph and got_nr == want_nr
@@ -1502,14 +1504,14 @@ def test_phrase_store_upsert_delete_copy_on_write(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_posdel_")
     try:
         rt._init_pos_store(docs, tmp)
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = vstore.manifest_entries(spark, tmp, 1)
         before = _tree_files(f"{tmp}/{rt._POS_ROOT}")
         affected = set(rt.delete_from_phrase_index(spark, tmp, dels))
         assert affected
         after = _tree_files(f"{tmp}/{rt._POS_ROOT}")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = vstore.manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in affected] == [
             e for e in m2 if e[1] not in affected
         ]
@@ -1788,11 +1790,11 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
         # truncated after the fact — the filter must run before the
         # ranking, so docs below the unfiltered top-k can surface)
         full = rt.topk_from_bm25_index(
-            rt._read_segments(
+            vstore.read_segments(
                 spark,
                 f"{tmp}/postings",
-                rt._manifest_entries(
-                    spark, tmp, rt._latest_version(spark, tmp)
+                vstore.manifest_entries(
+                    spark, tmp, vstore.latest_version(spark, tmp)
                 ),
                 rt._BM25_POSTING_SCHEMA,
             ).join(
@@ -1803,13 +1805,13 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
                 "left_semi",
             ),
             spark.read.parquet(
-                rt._table_dir(
-                    spark, tmp, "lexicon", rt._latest_version(spark, tmp)
+                vstore.table_dir(
+                    spark, tmp, "lexicon", vstore.latest_version(spark, tmp)
                 )
             ),
             spark.read.parquet(
-                rt._table_dir(
-                    spark, tmp, "stats", rt._latest_version(spark, tmp)
+                vstore.table_dir(
+                    spark, tmp, "stats", vstore.latest_version(spark, tmp)
                 )
             ).select(
                 (
@@ -1854,31 +1856,136 @@ def test_pos_stream_upsert_version_chain(spark, sf_dir):
     try:
         rt._init_pos_store(rt._base_docs(spark, sf_dir), build_tmp)
         want = rt._pos_probes_from_store(spark, build_tmp).collect()
-        rt._run_pos_upsert_stream(spark, sf_dir, tmp)
+        vstore.run_upsert_stream(
+            spark, rt._base_docs(spark, sf_dir), tmp, rt._init_pos_store,
+            rt._pos_stream_upsert,
+        )
         store = f"{tmp}/store"
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+        assert vstore.latest_version(spark, store) == vstore.N_FEED_FILES
         # every intermediate manifest survives (snapshot chain)
-        for v in range(1, rt.N_FEED_FILES + 1):
+        for v in range(1, vstore.N_FEED_FILES + 1):
             assert os.path.isfile(
-                rt._table_dir(spark, store, "manifests", v)
+                vstore.table_dir(spark, store, "manifests", v)
             )
         got = rt._pos_probes_from_store(spark, store).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
         # redelivery: fast marker present → no-op
-        v = rt._latest_version(spark, store)
-        for bid in range(rt.N_FEED_FILES):
+        v = vstore.latest_version(spark, store)
+        for bid in range(vstore.N_FEED_FILES):
             assert os.path.isdir(f"{store}/_batches/bid={bid}")
         redelivered = rt._base_docs(spark, sf_dir).limit(5)
-        rt._pos_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        vstore.stream_sink(
+            store, redelivered, 0, rt._init_pos_store, rt._pos_stream_upsert
+        )
+        assert vstore.latest_version(spark, store) == v
         # authoritative exactly-once: fast marker REMOVED, the publish
         # marker's bid still skips the redelivered batch
         shutil.rmtree(f"{store}/_batches/bid=0")
-        assert 0 in rt._published_bids(spark, store)
-        rt._pos_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        assert 0 in vstore.published_bids(spark, store)
+        vstore.stream_sink(
+            store, redelivered, 0, rt._init_pos_store, rt._pos_stream_upsert
+        )
+        assert vstore.latest_version(spark, store) == v
         got2 = rt._pos_probes_from_store(spark, store).collect()
         assert [tuple(r) for r in got2] == [tuple(r) for r in want]
     finally:
         shutil.rmtree(build_tmp, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+# --- a writer killed mid-publish must not wedge the store ---------------------
+
+
+def _store_family(spark, sf_dir, family):
+    """(init, upsert, serve, vacuum) of one store family over a fixed
+    base/batch split of its fixture input."""
+    from intellect_bi_spark.catalog import load_tables
+    from intellect_bi_spark.operators import retrieval as rt
+    from intellect_bi_spark.operators import sketches as sk
+
+    if family in ("bm25", "phrase"):
+        docs = rt._base_docs(spark, sf_dir)
+        base = docs.filter(~rt._doc_batch_pred())
+        batch = docs.filter(rt._doc_batch_pred())
+        if family == "bm25":
+            return (
+                lambda p: rt._init_bm25_store(base, p),
+                lambda p: rt.upsert_bm25_index(spark, p, batch),
+                lambda p: rt.serve_bm25_v2(spark, p).collect(),
+                lambda p: rt.vacuum_bm25_store(spark, p),
+            )
+        return (
+            lambda p: rt._init_pos_store(base, p),
+            lambda p: rt.upsert_phrase_index(spark, p, batch),
+            lambda p: rt._pos_probes_from_store(spark, p).collect(),
+            lambda p: rt.vacuum_phrase_store(spark, p),
+        )
+    if family == "ann":
+        emb = _emb(spark, sf_dir)
+        return (
+            lambda p: vs.build_index_frozen(spark, sf_dir, p),
+            lambda p: vs.upsert_index(
+                spark, sf_dir, p, emb.filter(vs._upsert_batch_pred())
+            ),
+            lambda p: vs.topk_from_index(
+                *vs.read_index_versioned(spark, p), emb
+            ).collect(),
+            lambda p: vs.vacuum_ann_store(spark, p),
+        )
+    ev = load_tables(spark, sf_dir)["events"].filter(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+    )
+    is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
+    return (
+        lambda p: sk._init_sketch_store(ev.filter(~is_batch_day), p),
+        lambda p: sk.upsert_sketch_rollup_store(ev.filter(is_batch_day), p),
+        lambda p: sorted(
+            tuple(r) for r in sk.serve_sketch_rollup_from_store(spark, p).collect()
+        ),
+        lambda p: sk.vacuum_sketch_store(spark, p),
+    )
+
+
+def _burn_marker(spark, store, v):
+    """The zero-length marker a writer killed between the marker's
+    create and its body write leaves behind."""
+    fs, hp = vstore.fs_of(spark, f"{store}/_published/v={v}")
+    fs.create(hp, False).close()
+
+
+@pytest.mark.parametrize("family", ["bm25", "phrase", "ann", "sketch"])
+def test_burned_marker_does_not_wedge_the_store(spark, sf_dir, family):
+    """A writer killed mid-publish leaves an empty ``_published`` marker
+    at latest+1.  The next upsert publishes at latest+2 (not three
+    conflicts on latest+1), serves exactly what a clean upsert serves,
+    and vacuum then sweeps the empty marker.  The same holds for an
+    init killed mid-publish at v=1; an init onto a store that already
+    has a published version still raises VersionConflict."""
+    import os
+
+    init, upsert, serve, vacuum = _store_family(spark, sf_dir, family)
+    clean = tempfile.mkdtemp(prefix="sgraft_burn_clean_")
+    wedged = tempfile.mkdtemp(prefix="sgraft_burn_wedged_")
+    fresh = tempfile.mkdtemp(prefix="sgraft_burn_init_")
+    try:
+        init(clean)
+        upsert(clean)
+        init(wedged)
+        _burn_marker(spark, wedged, 2)
+        upsert(wedged)
+        assert vstore.latest_version(spark, wedged) == 3
+        assert serve(wedged) == serve(clean)
+        vacuum(wedged)
+        assert [
+            n for n in os.listdir(f"{wedged}/_published")
+            if not n.endswith(".crc")
+        ] == ["v=3"]
+        assert serve(wedged) == serve(clean)
+        with pytest.raises(vstore.VersionConflict):
+            init(wedged)
+        _burn_marker(spark, fresh, 1)
+        init(fresh)
+        assert vstore.published_versions(spark, fresh) == [2]
+    finally:
+        for d in (clean, wedged, fresh):
+            shutil.rmtree(d, ignore_errors=True)

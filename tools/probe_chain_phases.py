@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Probe: phase decomposition of one stream-upsert chain (staging / stream
-with per-batch addBatch / serve) — run for bm25, ann, sketch, or phrase.
+"""Probe: phase decomposition of one stream-upsert chain (feed staging +
+stream with per-batch addBatch / serve) — run for bm25, ann, sketch, or
+phrase.
 
 Usage: python tools/probe_chain_phases.py [bm25|ann|sketch|phrase] [reps]
 """
@@ -26,57 +27,43 @@ def main() -> None:
     spark = get_spark("probe_chain_phases")
     from pyspark.sql import functions as F
 
-    from intellect_bi_spark.operators import retrieval, sketches, vectorstore
     from intellect_bi_spark.catalog import load_tables
+    from intellect_bi_spark.operators import retrieval, sketches, vectorstore
+    from intellect_bi_spark.operators.vstore import run_upsert_stream
 
-    N = retrieval.N_FEED_FILES
-
+    # (feed frame, init, upsert, serve of the drained store)
     if which == "bm25":
         feed_df = lambda: retrieval._base_docs(spark, sf_dir)  # noqa: E731
-        sink_fn = retrieval._bm25_stream_sink
+        init, upsert = retrieval._init_bm25_store, retrieval._bm25_stream_upsert
 
-        def serve(tmp):
-            store = f"{tmp}/store"
-            v = retrieval._latest_version(spark, store)
-            nd = spark.read.parquet(
-                retrieval._table_dir(spark, store, "stats", v)
-            ).select(F.col("n_docs").alias("n_docs_indexed"))
-            (
-                retrieval.serve_bm25_v2(spark, store)
-                .crossJoin(F.broadcast(nd))
-                .localCheckpoint(eager=True)
-            )
+        def serve(store):
+            retrieval.serve_bm25_v2(spark, store).collect()
+    elif which == "phrase":
+        feed_df = lambda: retrieval._base_docs(spark, sf_dir)  # noqa: E731
+        init, upsert = retrieval._init_pos_store, retrieval._pos_stream_upsert
+
+        def serve(store):
+            retrieval._pos_probes_from_store(spark, store).collect()
     elif which == "sketch":
         def feed_df():
             return load_tables(spark, sf_dir)["events"].filter(
                 F.col("user_id").isNotNull() & F.col("ts").isNotNull()
             )
-        sink_fn = sketches._sketch_stream_sink if hasattr(
-            sketches, "_sketch_stream_sink") else None
+        init, upsert = (
+            sketches._init_sketch_store, sketches.upsert_sketch_rollup_store
+        )
 
-        def serve(tmp):
-            sketches.serve_sketch_rollup_from_store(
-                spark, f"{tmp}/store"
-            ).collect()
+        def serve(store):
+            sketches.serve_sketch_rollup_from_store(spark, store).collect()
     elif which == "ann":
         feed_df = lambda: vectorstore._emb(spark, sf_dir)  # noqa: E731
+        init, upsert = vectorstore._ann_stream_callbacks(sf_dir)
 
-        def sink_fn(store, bdf, bid):
-            vectorstore._ann_stream_sink(sf_dir, store, bdf, bid)
-
-        def serve(tmp):
-            store = f"{tmp}/store"
-            c, cb, codes = vectorstore.read_index_versioned(spark, store)
-            nv = codes.select("vec_id").distinct().agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            (
-                vectorstore.topk_from_index(
-                    c, cb, codes, vectorstore._emb(spark, sf_dir)
-                )
-                .crossJoin(F.broadcast(nv))
-                .localCheckpoint(eager=True)
-            )
+        def serve(store):
+            vectorstore.topk_from_index(
+                *vectorstore.read_index_versioned(spark, store),
+                vectorstore._emb(spark, sf_dir),
+            ).collect()
     else:
         raise SystemExit(f"unsupported: {which}")
 
@@ -86,39 +73,21 @@ def main() -> None:
         try:
             ph = {}
             t0 = time.perf_counter()
-            df = feed_df()
-            df.repartition(N).write.parquet(f"{tmp}/feed")
-            ph["stage_feed"] = round(time.perf_counter() - t0, 3)
-            store = f"{tmp}/store"
-
-            def sink(bdf, bid):
-                sink_fn(store, bdf, bid)
-
-            t0 = time.perf_counter()
-            q = (
-                spark.readStream.schema(df.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/feed")
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-            ph["stream"] = round(time.perf_counter() - t0, 3)
+            progress = run_upsert_stream(spark, feed_df(), tmp, init, upsert)
+            ph["stage_and_stream"] = round(time.perf_counter() - t0, 3)
             ph["addBatch"] = [
                 json.loads(p.json).get("durationMs", {}).get("addBatch")
-                for p in q.recentProgress
+                for p in progress
             ]
             t0 = time.perf_counter()
-            serve(tmp)
+            serve(f"{tmp}/store")
             ph["serve"] = round(time.perf_counter() - t0, 3)
             spark.streams.resetTerminated()
             phases_all.append(ph)
             print(f"rep {rep}: {ph}", flush=True)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    for k in ("stage_feed", "stream", "serve"):
+    for k in ("stage_and_stream", "serve"):
         print(k, "median",
               round(statistics.median(p[k] for p in phases_all), 3))
 

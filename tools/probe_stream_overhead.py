@@ -61,7 +61,8 @@ def main():
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("probe_stream_overhead")
-    from intellect_bi_spark.operators.retrieval import N_FEED_FILES, _base_docs
+    from intellect_bi_spark.operators.retrieval import _base_docs
+    from intellect_bi_spark.operators.vstore import N_FEED_FILES
 
     docs = _base_docs(spark, sf_dir)
     feed = tempfile.mkdtemp(prefix="sgraft_probe_feed_")
